@@ -102,8 +102,8 @@ object Bench {
         // query records the -1 sentinel so failures can't masquerade as
         // fast runs
         val ok =
-          try { fn(spark, sfDir).write.format("noop")
-              .mode("overwrite").save(); true }
+          try { Graft.scoped(fn(spark, sfDir).write.format("noop")
+              .mode("overwrite").save()); true }
           catch { case e: Throwable =>
             System.err.println(
               s"[bench] $name failed (pass $pass): ${e.getMessage}"); false

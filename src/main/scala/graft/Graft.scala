@@ -32,4 +32,10 @@ object Graft {
     graft.functions.GraftExtensions.register(s)
     s
   }
+
+  /** Run `body` with every frame the engine materializes inside it
+    * released on exit, except what the returned value still reads.
+    * See docs/API.md, "Materialization scopes".
+    */
+  def scoped[T](body: => T): T = graft.engine.Pin.scoped(body)
 }

@@ -1,5 +1,7 @@
 package graft
 
+import graft.engine.Pin
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -204,18 +206,18 @@ object LlmQueries {
     * re-buckets the corpus. Values (and gate hashes) unchanged — the
     * nearDupEmb fixture discipline. */
   private def nearDupPairs(s: SparkSession, d: String): DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "nearDupPairs"),
+    Pin.memo((s, d, "nearDupPairs"))(
       Dedup.minhashCandidates(nearDupCorpus(s, d), "doc_id", "text",
         shingleWidth = 3, k = 16, bands = 4, minEstJaccard = 0.25,
-        maxBucket = 1000).localCheckpoint(true))
+        maxBucket = 1000).pin())
 
   /** Session-memoized connected components over [[nearDupPairs]] —
     * the iterative pointer-jumping pass is the expensive half of the
     * q69/q81/q139/q249 chain; ONE materialization serves all four. */
   private def nearDupClusters(s: SparkSession, d: String): DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "nearDupClusters"),
+    Pin.memo((s, d, "nearDupClusters"))(
       Dedup.duplicateClusters(nearDupPairs(s, d), "doc_a", "doc_b")
-        .localCheckpoint(true))
+        .pin())
 
   /** Exact dedup over the dup-injected corpus. */
   private val l6 = Spec("q55_dedup_exact",
@@ -495,18 +497,8 @@ object LlmQueries {
     * empty set and proves nothing). Everything runs in double on both
     * sides: float→double widening and the +0.25 shift are exact.
     */
-  /** Session-scoped fixture memo (the q218 counts-frame discipline,
-    * `llm/Shaping.scala`): a Verify/Bench run drives every query through
-    * ONE SparkSession, and several queries stage the same derived frame
-    * — rebuilding it per query re-scans and re-shuffles identically.
-    * `localCheckpoint(eager)` pins the result once; values (and thus
-    * gate hashes) are unchanged, only lineage is truncated.
-    */
-  private val fixtureMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
   private def nearDupEmb(s: SparkSession, d: String): DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "nearDupEmb"), {
+    Pin.memo((s, d, "nearDupEmb")) {
       val emb = T(s, d, "embeddings").select(col("vec_id"),
         col("embedding").cast("array<double>").as("embedding"))
       val exact = emb.filter(col("vec_id") % 100 === 0)
@@ -516,16 +508,16 @@ object LlmQueries {
           concat(array(element_at(col("embedding"), 1) + lit(0.25d)),
             slice(col("embedding"), lit(2), size(col("embedding")) - 1))
             .as("embedding"))
-      emb.unionByName(exact).unionByName(pert).localCheckpoint(true)
-    })
+      emb.unionByName(exact).unionByName(pert).pin()
+    }
 
   /** The q129/q230 shared PQ codebook (m=2 subspaces over the label
     * groups) — m×k rows, trivially checkpointable.
     */
   private def pqLabelCodebooks(s: SparkSession, d: String): DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "pqCodebooks"),
+    Pin.memo((s, d, "pqCodebooks"))(
       Similarity.pqCodebooks(T(s, d, "embeddings"), "embedding", "label",
-        m = 2, dim = 64).localCheckpoint(true))
+        m = 2, dim = 64).pin())
   private val nearDupEmbSql =
     """SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding
          FROM embeddings
@@ -6687,9 +6679,9 @@ object LlmQueries {
     * coPurchaseEdges/shipmentEdges discipline). */
   private def dbscanNbrs(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame =
-    fixtureMemo.getOrElseUpdate((s, d, "dbscanNbrs"), {
+    Pin.memo((s, d, "dbscanNbrs")) {
       val raw = graft.llm.Density.epsNeighborPairs(embedLattice2d(s, d),
-        "vec_id", "x", "y", epsMicro = 25000L).localCheckpoint(true)
+        "vec_id", "x", "y", epsMicro = 25000L).pin()
       // size the shared checkpoint from its TRUE materialized bytes
       // (r14, the loopParts discipline): the 9-cell join leaves the pair
       // frame at the join's partition count (measured 128 at sf0.1 for a
@@ -6698,12 +6690,9 @@ object LlmQueries {
       // aggregates read it pre-partitioned. At scale loopParts clamps to
       // the session constant and the frame is left exactly as built.
       val n = graft.engine.Relational.loopParts(raw)
-      if (n < raw.rdd.getNumPartitions) {
-        val sized = raw.repartition(n, col("a")).localCheckpoint(true)
-        graft.engine.Relational.releaseCheckpoint(raw)
-        sized
-      } else raw
-    })
+      if (n < raw.rdd.getNumPartitions) raw.repartition(n, col("a")).pin()
+      else raw
+    }
 
   /** Shared oracle prefix of the density pair: lattice points, eps-cells,
     * the 3×3 candidate join, exact neighbor counts, core set —
@@ -7868,14 +7857,11 @@ object LlmQueries {
     * q429 Cochran's Q share the 2/2/2 panel, so the triple corpus
     * tokenize+lang-ID is paid once (the edge-memo discipline).
     */
-  private val raterMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int, Int), DataFrame]
-
   private def raterFrame(s: SparkSession, d: String, minFull: Int,
       minHead: Int, minTail: Int): DataFrame =
-    raterMemo.getOrElseUpdate((s, d, minFull, minHead, minTail),
+    Pin.memo((s, d, "raterFrame", minFull, minHead, minTail))(
       raterFrameBuild(s, d, minFull, minHead, minTail)
-        .localCheckpoint(true))
+        .pin())
 
   private def raterFrameBuild(s: SparkSession, d: String, minFull: Int,
       minHead: Int, minTail: Int): DataFrame = {

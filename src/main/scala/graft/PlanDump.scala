@@ -35,9 +35,9 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
-        val txt = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val txt = Graft.scoped(SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(outDir, s"${name}_$tag.txt"), txt)
         println(s"[plandump] wrote $name ($tag)")

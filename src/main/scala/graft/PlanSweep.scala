@@ -160,9 +160,10 @@ object PlanSweep {
     var allowedWindows = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val finalPlan = fn(spark, sfDir).queryExecution.executedPlan
-        val plans = drain() :+ finalPlan
-        val findings = plans.flatMap(audit).distinct
+        val findings = Graft.scoped {
+          val finalPlan = fn(spark, sfDir).queryExecution.executedPlan
+          (drain() :+ finalPlan).flatMap(audit).distinct
+        }
         findings.foreach {
           case ("cartesian", node) =>
             cartesian += 1

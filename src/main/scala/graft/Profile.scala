@@ -96,8 +96,8 @@ object Profile {
         Thread.sleep(500)
         rec.reset()
         val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, sfDir).write.format("noop")
-          .mode("overwrite").save()
+        Graft.scoped(SparkEntry.queries(name)(spark, sfDir).write
+          .format("noop").mode("overwrite").save())
         val wall = (System.nanoTime() - t0) / 1e9
         Thread.sleep(500)
         println(f"%n=== $name pass $pass: $wall%.2f s, " +

@@ -1,5 +1,7 @@
 package graft
 
+import graft.engine.Pin
+import graft.engine.Pin.Ops
 import scala.collection.immutable.ListMap
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -2098,12 +2100,6 @@ object Queries {
           CAST(rank AS INT) AS rank FROM r CROSS JOIN t
         WHERE rank <= 10"""))
 
-  /** Session memo for shared graph fixtures (the LlmQueries.fixtureMemo
-    * discipline): one materialization per (session, sfDir) serves every
-    * consumer in the registry. */
-  private val graphMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-
   /** The co-purchase part graph: parts appearing on the same order are
     * linked. `% 3` keeps the demo subgraph a fixed ninth of the pair
     * volume; the operators themselves take any edge list.
@@ -2121,7 +2117,7 @@ object Queries {
     * materialization serves both (already localCheckpoint'd by the
     * builder, so the memo only prevents the rebuild). */
   private[graft] def pricePairedEcdf(s: SparkSession, d: String): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, "pricePairedEcdf"),
+    Pin.memo((s, d, "pricePairedEcdf"))(
       graft.engine.Relational.ecdfPaired(
         T(s, d, "lineitem").select(
           concat(lit("s"), (col("l_orderkey") % 3).cast("string"))
@@ -2131,7 +2127,7 @@ object Queries {
 
   private[graft] def coPurchaseEdges(s: SparkSession, d: String,
       modFilter: Boolean): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, s"coPurchase$modFilter"), {
+    Pin.memo((s, d, s"coPurchase$modFilter")) {
       val li = (if (modFilter)
           T(s, d, "lineitem").filter(col("l_partkey") % 3 === 0)
         else T(s, d, "lineitem"))
@@ -2140,8 +2136,8 @@ object Queries {
         .join(li.select(col("o"), col("l_partkey").as("pb")), "o")
         .filter(col("pa") < col("pb"))
         .select(col("pa"), col("pb"))
-        .distinct().localCheckpoint(true)
-    })
+        .distinct().pin()
+    }
 
   /** Session-memoized per-edge triangle support of the (mod-filtered)
     * co-purchase graph — the shared input of q371 (the support readout
@@ -2151,7 +2147,7 @@ object Queries {
     */
   private[graft] def coPurchaseSupport(s: SparkSession,
       d: String): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, "coPurchaseSupport"),
+    Pin.memo((s, d, "coPurchaseSupport"))(
       graft.engine.Graph.edgeTriangleSupport(
         coPurchaseEdges(s, d, modFilter = true), "pa", "pb"))
 
@@ -2161,13 +2157,13 @@ object Queries {
     * duplicate-edge-insensitive, so the distinct here changes nothing
     * observable — it only lets ONE join serve both iterative queries. */
   private[graft] def shipmentEdges(s: SparkSession, d: String): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, "shipmentEdges"),
+    Pin.memo((s, d, "shipmentEdges"))(
       T(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
         .join(T(s, d, "orders").select(col("o_orderkey"), col("o_custkey")),
           col("l_orderkey") === col("o_orderkey"))
         .select(concat(lit("s"), col("l_suppkey").cast("string")).as("src"),
           concat(lit("c"), col("o_custkey").cast("string")).as("dst"))
-        .distinct().localCheckpoint(true))
+        .distinct().pin())
 
   /** OP-MISC-11 — per-node triangle counts over the co-purchase part
     * graph (degree-oriented enumeration; the oracle enumerates the same
@@ -3511,13 +3507,13 @@ object Queries {
     * the shared cell frame of the spatial-statistics pair q401/q402. */
   private[graft] def quantityGridCells(s: SparkSession,
       d: String): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, "quantityGridCells"),
+    Pin.memo((s, d, "quantityGridCells"))(
       T(s, d, "lineitem")
         .select((col("l_partkey") % 40).as("__gx"),
           (col("l_suppkey") % 40).as("__gy"),
           col("l_quantity").cast("long").as("__q"))
         .groupBy(col("__gx"), col("__gy"))
-        .agg(sum(col("__q")).as("__x")).localCheckpoint(true))
+        .agg(sum(col("__q")).as("__x")).pin())
 
   /** Session-memoized DIRECTED queen-neighbor pair frame of that grid
     * (`(center gx, gy, xi) × (neighbor xj)`, 8-bounded per cell): the
@@ -3525,7 +3521,7 @@ object Queries {
     * (the skipgramPmi discipline — never a filter after a wide join). */
   private[graft] def quantityGridPairs(s: SparkSession,
       d: String): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, "quantityGridPairs"), {
+    Pin.memo((s, d, "quantityGridPairs")) {
       val cells = quantityGridCells(s, d)
       val offs = for { dx <- -1 to 1; dy <- -1 to 1
         if dx != 0 || dy != 0 } yield (dx, dy)
@@ -3539,8 +3535,8 @@ object Queries {
           col("__gy").as("__ny"), col("__x").as("__xj")),
           Seq("__nx", "__ny"))
         .select(col("__gx"), col("__gy"), col("__xi"), col("__xj"))
-        .localCheckpoint(true)
-    })
+        .pin()
+    }
 
   /** Shared DuckDB fragment for the grid + queen-neighbor pairs. */
   private val gridSql =
@@ -4715,13 +4711,13 @@ object Queries {
     * are all pure aggregates of this ONE frame, so the iterative BFS
     * cost is paid once per (session, input) like the edge memos. */
   private[graft] def landmarkBfs(s: SparkSession, d: String): DataFrame =
-    graphMemo.getOrElseUpdate((s, d, "landmarkBfs"), {
+    Pin.memo((s, d, "landmarkBfs")) {
       val edges = coPurchaseEdges(s, d, modFilter = true)
       val seeds = edges.select(col("pa").as("n"))
         .unionByName(edges.select(col("pb").as("n")))
         .distinct().filter(col("n") % 300 === 0)
       Graph.multiSourceBfs(edges, "pa", "pb", seeds, "n", maxHops = 4)
-    })
+    }
 
   /** Shared DuckDB fragment: co-purchase undirected edges + landmark
     * BFS (recursive CTE) → `m(seed, id, hop)`, `nodes(n)`. */

@@ -27,7 +27,8 @@ object Verify {
     SparkEntry.queries.filter { case (name, _) =>
       only.forall(_.exists(name.startsWith))
     }.foreach { case (name, fn) =>
-      try {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      try Graft.scoped {
         val df = fn(spark, sfDir)
         // Driver compare: DuckDB oracles emit naive TIMESTAMP; Spark's
         // derived timestamps are session-TZ LTZ and parquet-dump as
@@ -48,6 +49,11 @@ object Verify {
       } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      val left = spark.sparkContext.getPersistentRDDs.keySet.toSet --
+        before -- engine.Pin.memoRddIds
+      if (left.nonEmpty)
+        System.err.println(s"[verify] $name left ${left.size} pinned " +
+          s"RDD(s) beyond the memos: ${left.toSeq.sorted.mkString(",")}")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -36,21 +37,19 @@ object Graph {
     * (measured: 6.7 s → 2.x s for 3 rounds over a 485k-edge graph at
     * sf0.1). Each round is then one src-keyed join (rank is node-grain)
     * + one dst-keyed aggregate — the minimal two-exchange round a
-    * synchronous push model admits. The final rank is materialized with
-    * an eager localCheckpoint so both caches can be RELEASED before
-    * returning (same persist-once/checkpoint/release discipline as
-    * `Dedup.fuzzyDuplicates`); it also truncates the iters-deep lineage
-    * for whatever runs downstream.
+    * synchronous push model admits. The final rank is eagerly pinned,
+    * which truncates the iters-deep lineage for whatever runs
+    * downstream.
     */
   def pageRankPpm(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, dampPct: Int = 85): DataFrame = {
+      iters: Int, dampPct: Int = 85): DataFrame = Pin.scoped {
     require(iters >= 1, "need at least one round")
     require(dampPct >= 0 && dampPct <= 100, "dampPct is a percentage")
     // e is read four times just to BUILD the two loop frames (src/dst
     // union for nodes, edge+degree for withDeg) — cache it through the
-    // build, released with the rest
+    // build
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist()
+      .distinct().cached()
     // both loop-invariant frames are persisted ALREADY PARTITIONED AND
     // SORTED on their join keys (r13: cached plans preserve output
     // ordering, so every round's sort-merge join skips re-sorting the
@@ -78,11 +77,7 @@ object Graph {
           expr(s"($dampPct * coalesce(__s, CAST(0 AS BIGINT))) DIV 100"))
           .as("rank"))
     }
-    val out = rank.localCheckpoint(true)
-    withDeg.unpersist(false)
-    nodes.unpersist(false)
-    e.unpersist(false)
-    out
+    rank.pin()
   }
 
   /** Katz centrality in exact integer ppm (Katz 1953): attenuated walk
@@ -110,7 +105,7 @@ object Graph {
     * driver read of the persisted edge frame (the timeBounds class).
     */
   def katzCentralityPpm(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int, attenDiv: Int = 8): DataFrame = {
+      iters: Int, attenDiv: Int = 8): DataFrame = Pin.scoped {
     require(iters >= 1, "need at least one round")
     require(attenDiv >= 2, "attenuation divisor must be >= 2")
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
@@ -140,10 +135,7 @@ object Graph {
         .select(col("id"), (lit(1000000L) +
           coalesce(col("__s"), lit(0L))).as("katz"))
     }
-    val out = x.localCheckpoint(true)
-    nodes.unpersist(false)
-    e.unpersist(false)
-    out
+    x.pin()
   }
 
   /** Personalized PageRank in exact integer ppm — [[pageRankPpm]] with
@@ -168,11 +160,11 @@ object Graph {
     */
   def personalizedPageRankPpm(edges: DataFrame, srcCol: String,
       dstCol: String, seeds: DataFrame, seedCol: String, iters: Int,
-      dampPct: Int = 85): DataFrame = {
+      dampPct: Int = 85): DataFrame = Pin.scoped {
     require(iters >= 1, "need at least one round")
     require(dampPct >= 0 && dampPct <= 100, "dampPct is a percentage")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct().persist()
+      .distinct().cached()
     val sd = seeds.select(col(seedCol).as("id")).distinct()
       .withColumn("__seed", lit(1L))
     val np = Relational.loopParts(e)
@@ -197,11 +189,7 @@ object Graph {
           expr(s"($dampPct * coalesce(__s, CAST(0 AS BIGINT))) DIV 100"))
           .as("rank"))
     }
-    val out = rank.localCheckpoint(true)
-    withDeg.unpersist(false)
-    nodes.unpersist(false)
-    e.unpersist(false)
-    out
+    rank.pin()
   }
 
   /** Canonical undirected edge list: endpoints ordered `u < v`, self-loops
@@ -230,12 +218,12 @@ object Graph {
     * 100 TB) collapses to O(m^1.5) total work, the Chiba–Nishizeki bound.
     * Three shuffles after the orientation build: wedge self-join on the
     * pivot `a`, closing semi-join on `(b, c)`, and the final per-node
-    * aggregate. The oriented frame is persisted once and read three
-    * times; both caches are released before returning.
+    * aggregate. The oriented frame is pinned once and read three
+    * times.
     */
   def triangleCounts(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e0 = undirected(edges, srcCol, dstCol).persist()
+      dstCol: String): DataFrame = Pin.scoped {
+    val e0 = undirected(edges, srcCol, dstCol).cached()
     val deg = e0.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val ou = struct(col("du").as("d"), col("u").as("n"))
@@ -253,7 +241,7 @@ object Graph {
       // orientation build (the q330/q60 duplicate-subtree class).
       // Materializing once up-front is the work the first consumer
       // paid anyway; readers then scan cached blocks.
-      .localCheckpoint(true)
+      .pin()
     val wedges = o.select(col("a"), col("b").as("wb"), col("ob").as("owb"))
       .join(o.select(col("a"), col("b").as("wc"), col("ob").as("owc")), "a")
       .filter(col("owb") < col("owc"))
@@ -261,19 +249,10 @@ object Graph {
     val tris = wedges.join(
       o.select(col("a").as("wb"), col("b").as("wc")), Seq("wb", "wc"),
       "left_semi")
-    val out = tris
+    tris
       .select(explode(array(col("a"), col("wb"), col("wc"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("triangles"))
-      .localCheckpoint(true)
-    // o is an eager checkpoint: release its RDD blocks directly (a
-    // DataFrame.unpersist is a no-op on a checkpointed frame)
-    o.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    e0.unpersist(false)
-    out
+      .pin()
   }
 
   /** Per-EDGE triangle support over the undirected graph — for every
@@ -296,8 +275,8 @@ object Graph {
     * wedge-grain.
     */
   def edgeTriangleSupport(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e0 = undirected(edges, srcCol, dstCol).persist()
+      dstCol: String): DataFrame = Pin.scoped {
+    val e0 = undirected(edges, srcCol, dstCol).cached()
     val deg = e0.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val ou = struct(col("du").as("d"), col("u").as("n"))
@@ -315,7 +294,7 @@ object Graph {
       // orientation build (the q330/q60 duplicate-subtree class).
       // Materializing once up-front is the work the first consumer
       // paid anyway; readers then scan cached blocks.
-      .localCheckpoint(true)
+      .pin()
     val wedges = o.select(col("a"), col("b").as("wb"), col("ob").as("owb"))
       .join(o.select(col("a"), col("b").as("wc"), col("ob").as("owc")), "a")
       .filter(col("owb") < col("owc"))
@@ -333,19 +312,10 @@ object Graph {
           greatest(col("wb"), col("wc")).as("v")))).as("__e"))
       .select(col("__e.u").as("u"), col("__e.v").as("v"))
       .groupBy(col("u"), col("v")).agg(count(lit(1)).as("__s"))
-    val out = e0.join(sup, Seq("u", "v"), "left")
+    e0.join(sup, Seq("u", "v"), "left")
       .select(col("u"), col("v"),
         coalesce(col("__s"), lit(0L)).as("support"))
-      .localCheckpoint(true)
-    // o is an eager checkpoint: release its RDD blocks directly (a
-    // DataFrame.unpersist is a no-op on a checkpointed frame)
-    o.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    e0.unpersist(false)
-    out
+      .pin()
   }
 
   /** k-truss peeling (Cohen 2008): iteratively delete edges whose
@@ -385,7 +355,7 @@ object Graph {
   def kTruss(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
       maxRounds: Int): DataFrame = {
     require(k >= 3 && maxRounds >= 1, "need k >= 3, maxRounds >= 1")
-    val start = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    val start = undirected(edges, srcCol, dstCol).pin()
     if (start.isEmpty)
       return start.withColumn("support", lit(0L)).filter(lit(false))
     kTrussFromSupport(edgeTriangleSupport(start, "u", "v"), k, maxRounds)
@@ -424,11 +394,11 @@ object Graph {
         .getOrElse(0L)
       val nDel = Option(cnts.get(1)).map(_.asInstanceOf[Long])
         .getOrElse(0L)
-      last = sup.filter(col("support") >= thresh).localCheckpoint(true)
+      last = sup.filter(col("support") >= thresh).pin()
       // lazy: only the incremental branch reads it (twice — expand +
       // anti-join), and its first action materializes the cache
       val del = sup.filter(col("support") < thresh)
-        .select(col("u"), col("v")).localCheckpoint(false)
+        .select(col("u"), col("v")).pin(eager = false)
       round += 1
       if (nDel == 0 || round >= maxRounds) done = true
       else if (nDel > nKeep) {
@@ -478,7 +448,7 @@ object Graph {
           .select(col("u"), col("v"),
             (col("support") - coalesce(col("__dec"), lit(0L)))
               .as("support"))
-          .localCheckpoint(true)
+          .pin()
       }
     }
     last
@@ -518,8 +488,8 @@ object Graph {
     * Scale: each round is one degree aggregate (map-side combined) plus
     * two semi-joins of the edge frame against the (much smaller)
     * survivor set — the edge frame shrinks monotonically, so round cost
-    * decays. Each round's edge frame is EAGERLY checkpointed and the
-    * previous one released (the [[bfsHops]] lineage discipline, made
+    * decays. Each round's edge frame is EAGERLY checkpointed (the
+    * [[bfsHops]] lineage discipline, made
     * eager in r14): a round's frame has three INDEPENDENT readers inside
     * one job — the next degree aggregate and the two survivor semi-join
     * broadcast builds — and a lazy persist let those stages race and each
@@ -531,9 +501,9 @@ object Graph {
     * constant.
     */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int): DataFrame = {
+      k: Int, rounds: Int): DataFrame = Pin.scoped {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
-    var e = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    var e = undirected(edges, srcCol, dstCol).pin()
     for (_ <- 1 to rounds) {
       val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
         .groupBy("n").agg(count(lit(1)).as("d"))
@@ -542,15 +512,13 @@ object Graph {
           "left_semi")
         .join(survivors.withColumnRenamed("n", "v"), Seq("v"),
           "left_semi")
-        .select("u", "v").localCheckpoint(true)
-      Relational.releaseCheckpoint(e)
+        .select("u", "v").pin()
+      Pin.release(e)
       e = next
     }
-    val out = e.select(explode(array(col("u"), col("v"))).as("node"))
+    e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true)
-    Relational.releaseCheckpoint(e)
-    out
+      .pin()
   }
 
   /** Neighbor-set Jaccard similarity for node pairs sharing at least
@@ -569,31 +537,29 @@ object Graph {
     * node-grain frame joined twice.
     */
   def neighborJaccard(edges: DataFrame, srcCol: String, dstCol: String,
-      minCommon: Int): DataFrame = {
+      minCommon: Int): DataFrame = Pin.scoped {
     require(minCommon >= 1, "minCommon must be positive")
     val e = undirected(edges, srcCol, dstCol)
     val nbrs = e.select(explode(array(
         struct(col("u").as("n"), col("v").as("m")),
         struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
       .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
-      .persist()
+      .cached()
     // node-grain, read by BOTH endpoint joins — checkpointed (audit rule)
     val deg = nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .pin()
     val pairs = nbrs.select(col("n").as("a"), col("m"))
       .join(nbrs.select(col("n").as("b"), col("m")), "m")
       .filter(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("common"))
       .filter(col("common") >= minCommon)
-    val out = pairs
+    pairs
       .join(deg.select(col("n").as("a"), col("deg").as("__da")), "a")
       .join(deg.select(col("n").as("b"), col("deg").as("__db")), "b")
       .withColumn("jaccard", round(col("common").cast("double") /
         (col("__da") + col("__db") - col("common")).cast("double"), 6))
       .select(col("a"), col("b"), col("common"), col("jaccard"))
-      .localCheckpoint(true)
-    nbrs.unpersist(false)
-    out
+      .pin()
   }
 
   /** Resource-Allocation link-prediction index (Zhou–Lü–Zhang 2009)
@@ -622,19 +588,19 @@ object Graph {
     * the per-pair aggregate, the adjacency anti-join.
     */
   def resourceAllocation(edges: DataFrame, srcCol: String,
-      dstCol: String, minCommon: Int): DataFrame = {
+      dstCol: String, minCommon: Int): DataFrame = Pin.scoped {
     require(minCommon >= 1, "minCommon must be positive")
-    val e = undirected(edges, srcCol, dstCol).persist()
+    val e = undirected(edges, srcCol, dstCol).cached()
     val nbrs = e.select(explode(array(
         struct(col("u").as("n"), col("v").as("m")),
         struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
       .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
-      .persist()
+      .cached()
     // node-grain, eager (r14 — the neighborJaccard audit rule): its
     // checkpoint job also materializes the nbrs cache BEFORE the wedge
     // join's independent stages can race it
     val deg = nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .pin()
     val pairs = nbrs.select(col("n").as("a"), col("m"))
       .join(nbrs.select(col("n").as("b"), col("m")), "m")
       .filter(col("a") < col("b"))
@@ -645,13 +611,10 @@ object Graph {
       .agg(count(lit(1)).as("common"),
         sum(expr("1000000L DIV __dz")).as("ra_micro"))
       .filter(col("common") >= minCommon)
-    val out = pairs
+    pairs
       .join(e.select(col("u").as("a"), col("v").as("b")), Seq("a", "b"),
         "left_anti")
-      .localCheckpoint(true)
-    nbrs.unpersist(false)
-    e.unpersist(false)
-    out
+      .pin()
   }
 
   /** Local clustering coefficient per node over the UNDIRECTED graph:
@@ -673,21 +636,19 @@ object Graph {
     * and one left join of the (≤ node-count) triangle frame onto it.
     */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e = undirected(edges, srcCol, dstCol).persist()
+      dstCol: String): DataFrame = Pin.scoped {
+    val e = undirected(edges, srcCol, dstCol).cached()
     val d38 = "decimal(38,0)"
     val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("degree"))
     val tri = triangleCounts(e, "u", "v")
-    val out = deg.filter(col("degree") >= 2)
+    deg.filter(col("degree") >= 2)
       .join(tri, Seq("node"), "left")
       .withColumn("triangles", coalesce(col("triangles"), lit(0L)))
       .withColumn("cc_micro",
         expr(s"(CAST(triangles AS $d38) * 2000000) DIV " +
           s"(CAST(degree AS $d38) * (degree - 1))"))
-      .localCheckpoint(true)
-    e.unpersist(false)
-    out
+      .pin()
   }
 
   /** Synchronous label propagation from clamped seeds — the
@@ -710,7 +671,7 @@ object Graph {
     */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, nodeCol: String, labelCol: String,
-      rounds: Int): DataFrame = {
+      rounds: Int): DataFrame = Pin.scoped {
     require(rounds >= 1, "rounds must be positive")
     val e = undirected(edges, srcCol, dstCol)
     // per-round joins key on m — persist the neighbor list partitioned
@@ -723,7 +684,7 @@ object Graph {
     val nbrs = Relational.loopCache(nbrs0, "m",
       Relational.loopParts(nbrs0))
     val seed = seeds.select(col(nodeCol).as("n"), col(labelCol).as("label"))
-      .localCheckpoint(true)
+      .pin()
     var labels = seed
     for (_ <- 1 to rounds) {
       val votes = nbrs
@@ -736,9 +697,8 @@ object Graph {
         .filter(col("__r") === 1).select(col("n"), col("label"))
       labels = seed
         .unionByName(pick.join(seed.select("n"), Seq("n"), "left_anti"))
-        .localCheckpoint(true)
+        .pin()
     }
-    nbrs.unpersist(false)
     labels.select(col("n").as("node"), col("label"))
   }
 
@@ -771,10 +731,10 @@ object Graph {
     * re-minimized with one aggregate per round. The edge list is persisted
     * pre-partitioned on `src` once; `maxHops` is a fixed unroll (same
     * posture as [[pageRankPpm]]), and the result is eagerly checkpointed
-    * so the cache can be released and the `maxHops`-deep lineage truncated.
+    * so the `maxHops`-deep lineage is truncated.
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
+      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = Pin.scoped {
     require(maxHops >= 1, "need at least one hop")
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
@@ -787,22 +747,17 @@ object Graph {
     // level — 2^maxHops recompute (measured 6.3 s → 2.6 s at 3 hops on
     // the sf0.1 shipment graph just from caching these).
     var dist = seeds.select(col(seedCol).as("id")).filter(col("id").isNotNull)
-      .distinct().withColumn("hop", lit(0)).persist()
-    val rounds = scala.collection.mutable.Buffer(dist)
+      .distinct().withColumn("hop", lit(0)).cached()
     for (i <- 1 to maxHops) {
       val next = dist.filter(col("hop") === i - 1)
         .withColumnRenamed("id", "src")
         .join(e, "src")
         .select(col("dst").as("id"), lit(i).as("hop"))
       dist = Relational.loopShrink(dist.unionByName(next)
-        .groupBy("id").agg(min(col("hop")).as("hop")), "id", np).persist()
-      rounds += dist
+        .groupBy("id").agg(min(col("hop")).as("hop")), "id", np).cached()
     }
-    val out = dist.withColumn("hop", col("hop").cast("int"))
-      .localCheckpoint(true)
-    rounds.foreach(_.unpersist(false))
-    e.unpersist(false)
-    out
+    dist.withColumn("hop", col("hop").cast("int"))
+      .pin()
   }
 
   /** Per-community modularity contributions (Newman & Girvan, PRE
@@ -826,11 +781,11 @@ object Graph {
     */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
       assign: DataFrame, nodeCol: String,
-      communityCol: String): DataFrame = {
+      communityCol: String): DataFrame = Pin.scoped {
     // eager: the broadcast m build, deg, and both eIn join sides read
     // this concurrently inside the one out-building job — a lazy cache
     // loses the race and re-runs the undirected() distinct per reader
-    val e = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    val e = undirected(edges, srcCol, dstCol).pin()
     val m = e.agg(count(lit(1)).as("__m"))
     val asg = assign.select(col(nodeCol).as("__node"),
       col(communityCol).as("community"))
@@ -847,7 +802,7 @@ object Graph {
       .filter(col("__cu") === col("__cv"))
       .groupBy(col("__cu").as("community"))
       .agg(count(lit(1)).as("e_in"))
-    val out = byComm.join(eIn, Seq("community"), "left")
+    byComm.join(eIn, Seq("community"), "left")
       .withColumn("e_in", coalesce(col("e_in"), lit(0L)))
       .crossJoin(broadcast(m))
       .withColumn("q_contrib", round(expr(
@@ -856,9 +811,7 @@ object Graph {
           "* (CAST(deg_sum AS DOUBLE) / CAST(2 * __m AS DOUBLE))"), 6))
       .select(col("community"), col("n_nodes"), col("e_in"),
         col("deg_sum"), col("q_contrib"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(e)
-    out
+      .pin()
   }
 
   /** Degree assortativity (Newman, PRL 2002): the Pearson correlation
@@ -876,8 +829,8 @@ object Graph {
     * degree map per endpoint, collapsed to a single row. Edge-linear.
     */
   def degreeAssortativity(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
-    val e = undirected(edges, srcCol, dstCol).persist()
+      dstCol: String): DataFrame = Pin.scoped {
+    val e = undirected(edges, srcCol, dstCol).cached()
     val deg = e.select(explode(array(col("u"), col("v"))).as("__node"))
       .groupBy(col("__node")).agg(count(lit(1)).as("__deg"))
     val pairs = e
@@ -885,7 +838,7 @@ object Graph {
         Seq("u"))
       .join(deg.select(col("__node").as("v"), col("__deg").as("__dv")),
         Seq("v"))
-    val out = pairs
+    pairs
       .agg(count(lit(1)).as("__m"),
         sum(col("__du") + col("__dv")).as("sx"),
         sum(col("__du") * col("__dv") * 2L).as("sxy"),
@@ -900,9 +853,7 @@ object Graph {
           "/ (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) " +
           "- CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) END"), 6))
       .select(col("__m").as("m"), col("r"))
-      .localCheckpoint(true)
-    e.unpersist(false)
-    out
+      .pin()
   }
 
   /** Deterministic negative-edge sampling for link-prediction /
@@ -927,12 +878,12 @@ object Graph {
     * are key-equi; nothing is pairwise.
     */
   def negativeEdgeSamples(edges: DataFrame, srcCol: String,
-      dstCol: String, k: Int, oversample: Int): DataFrame = {
+      dstCol: String, k: Int, oversample: Int): DataFrame = Pin.scoped {
     require(oversample >= k && k >= 1, "need oversample >= k >= 1")
     // eager (the modularity rationale): the final job reads e via
     // undirectedKeys while the draws side re-reads indexed — lazy
     // caches on either frame race their concurrent readers
-    val e = undirected(edges, srcCol, dstCol).localCheckpoint(true)
+    val e = undirected(edges, srcCol, dstCol).pin()
     val nodes = e.select(explode(array(col("u"), col("v"))).as("id")).distinct()
     // id-ordered node index via the distributed two-level rank — the
     // former corpus-grain Window.orderBy(id) was the one
@@ -940,7 +891,7 @@ object Graph {
     val indexed = graft.engine.Relational
       .globalRank(nodes, Seq(col("id")), "__rk1")
       .withColumn("__idx", col("__rk1") - 1).drop("__rk1")
-      .localCheckpoint(true)
+      .pin()
     val nV = indexed.agg(count(lit(1)).as("__n"))
     val draws = indexed.select(col("id").as("u"))
       .crossJoin(broadcast(nV))
@@ -956,7 +907,7 @@ object Graph {
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("__uv"))
       .select(col("__uv.u").as("u"), col("__uv.v").as("v"))
-    val out = draws
+    draws
       .filter(col("neg_id") =!= col("u"))
       .join(undirectedKeys.withColumnRenamed("v", "neg_id"),
         Seq("u", "neg_id"), "left_anti")
@@ -967,10 +918,7 @@ object Graph {
           .orderBy(col("j"))))
       .filter(col("__rk") <= k)
       .select(col("u"), col("j"), col("neg_id"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(indexed)
-    graft.engine.Relational.releaseCheckpoint(e)
-    out
+      .pin()
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM 1999), `iters` synchronous
@@ -988,7 +936,7 @@ object Graph {
     * and node frame are persisted pre-partitioned on their join keys
     * once, each round is one src-keyed join + one dst-keyed aggregate
     * per direction, the max is a one-row broadcast, and the result is
-    * eagerly checkpointed so both caches release before returning.
+    * eagerly checkpointed.
     *
     * Output: `(id, hub, auth)` for every node.
     */
@@ -1011,16 +959,15 @@ object Graph {
     * distinct/repartition/persist paid ONCE.
     */
   def pseudoDiameter(edges: DataFrame, srcCol: String, dstCol: String,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): DataFrame = Pin.scoped {
     require(maxHops >= 1, "need at least one hop")
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
     val np = Relational.loopParts(e0)
     val e = Relational.loopCache(e0, "src", np)
-    def sweep(seed: DataFrame): DataFrame = {
-      var dist = seed.withColumn("hop", lit(0)).persist()
-      val rounds = scala.collection.mutable.Buffer(dist)
+    def sweep(seed: DataFrame): DataFrame = Pin.scoped {
+      var dist = seed.withColumn("hop", lit(0)).cached()
       for (i <- 1 to maxHops) {
         val next = dist.filter(col("hop") === i - 1)
           .withColumnRenamed("id", "src")
@@ -1028,12 +975,9 @@ object Graph {
           .select(col("dst").as("id"), lit(i).as("hop"))
         dist = Relational.loopShrink(dist.unionByName(next)
           .groupBy("id").agg(min(col("hop")).as("hop")), "id", np)
-          .persist()
-        rounds += dist
+          .cached()
       }
-      val out = dist.localCheckpoint(true)
-      rounds.foreach(_.unpersist(false))
-      out
+      dist.pin()
     }
     // farthest node, ties to the smallest id: one agg of (hop, id)
     // pairs via max_by on the (hop, negated-lexico) struct is not
@@ -1046,12 +990,12 @@ object Graph {
     val a0 = e.select(explode(array(col("src"), col("dst"))).as("id"))
       .agg(min(col("id")).as("id"))
     val d1 = sweep(a0.select("id"))
-    val f1 = far(d1).localCheckpoint(true)
+    val f1 = far(d1).pin()
     val n1 = d1.agg(count(lit(1)).as("n_reached1"))
     val d2 = sweep(f1.select("id"))
     val f2 = far(d2)
     val n2 = d2.agg(count(lit(1)).as("n_reached2"))
-    val out = a0.select(col("id").as("anchor0"))
+    a0.select(col("id").as("anchor0"))
       .crossJoin(f1.select(col("id").as("anchor1"),
         col("ecc").as("ecc1")))
       .crossJoin(broadcast(n1))
@@ -1061,13 +1005,11 @@ object Graph {
         col("n_reached1").cast("long").as("n_reached1"),
         col("anchor1"), col("ecc2").cast("int").as("ecc2"),
         col("n_reached2").cast("long").as("n_reached2"))
-      .localCheckpoint(true)
-    e.unpersist(false)
-    out
+      .pin()
   }
 
   def hitsPpm(edges: DataFrame, srcCol: String, dstCol: String,
-      iters: Int): DataFrame = {
+      iters: Int): DataFrame = Pin.scoped {
     require(iters >= 1, "need at least one round")
     // TWO pre-partitioned cached copies of the edge list, one per join
     // key (r13, guide §2.4 "remove shuffles outright"): each round joins
@@ -1099,7 +1041,7 @@ object Graph {
     // zeros — so the all-nodes left-join runs ONCE per output column,
     // not once per round (round-10 rewrite; values are bit-identical).
     def normRaw(raw0: DataFrame, c: String): DataFrame = {
-      val raw = raw0.localCheckpoint(true)
+      val raw = raw0.pin()
       val mx = raw.agg(max(col(c)).as("__mx"))
       raw.crossJoin(broadcast(mx))
         .select(col("id"), when(col("__mx").isNull || col("__mx") === 0L,
@@ -1126,13 +1068,9 @@ object Graph {
         .groupBy(col("src").as("id")).agg(sum(col("auth")).as("hub")),
         "hub")
     }
-    val out = expand(hub, "hub").join(expand(auth, "auth"), Seq("id"))
+    expand(hub, "hub").join(expand(auth, "auth"), Seq("id"))
       .select(col("id"), col("hub"), col("auth"))
-      .localCheckpoint(true)
-    nodes.unpersist(false)
-    eDst.unpersist(false)
-    eSrc.unpersist(false)
-    out
+      .pin()
   }
 
   /** Multi-source BFS over the UNDIRECTED graph: min-hop distance from
@@ -1145,14 +1083,14 @@ object Graph {
     * aggregate of this frame.
     *
     * Same round discipline as [[bfsHops]] (persist per round — the
-    * frame is read twice per level; eager checkpoint + release at the
-    * end), except the frontier carries the seed key, so each round is
+    * frame is read twice per level; eager checkpoint at the end),
+    * except the frontier carries the seed key, so each round is
     * one src-keyed join + one (seed,id) min-aggregate — cost is
     * O(hops · Σ_seeds reached-edges), linear in the seed count, never
     * all-pairs.
     */
   def multiSourceBfs(edges: DataFrame, srcCol: String, dstCol: String,
-      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
+      seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = Pin.scoped {
     require(maxHops >= 1, "need at least one hop")
     val und = undirected(edges, srcCol, dstCol)
     val e0 = und.select(explode(array(
@@ -1163,8 +1101,7 @@ object Graph {
     val e = Relational.loopCache(e0, "src", np)
     var dist = seeds.select(col(seedCol).as("seed"))
       .filter(col("seed").isNotNull).distinct()
-      .withColumn("id", col("seed")).withColumn("hop", lit(0)).persist()
-    val rounds = scala.collection.mutable.Buffer(dist)
+      .withColumn("id", col("seed")).withColumn("hop", lit(0)).cached()
     for (i <- 1 to maxHops) {
       val next = dist.filter(col("hop") === i - 1)
         .select(col("seed"), col("id").as("src"))
@@ -1172,14 +1109,10 @@ object Graph {
         .select(col("seed"), col("dst").as("id"), lit(i).as("hop"))
       dist = Relational.loopShrink(dist.unionByName(next)
         .groupBy("seed", "id").agg(min(col("hop")).as("hop")), "id", np)
-        .persist()
-      rounds += dist
+        .cached()
     }
-    val out = dist.withColumn("hop", col("hop").cast("int"))
-      .localCheckpoint(true)
-    rounds.foreach(_.unpersist(false))
-    e.unpersist(false)
-    out
+    dist.withColumn("hop", col("hop").cast("int"))
+      .pin()
   }
 
   /** Bounded-horizon closeness centrality per seed from a
@@ -1245,14 +1178,14 @@ object Graph {
     * pair aggregate; no all-pairs anywhere.
     */
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
-      minCommon: Int): DataFrame = {
+      minCommon: Int): DataFrame = Pin.scoped {
     require(minCommon >= 1, "minCommon must be positive")
-    val e = undirected(edges, srcCol, dstCol).persist()
+    val e = undirected(edges, srcCol, dstCol).cached()
     val nbrs = e.select(explode(array(
         struct(col("u").as("n"), col("v").as("m")),
         struct(col("v").as("n"), col("u").as("m")))).as("__nm"))
       .select(col("__nm.n").as("n"), col("__nm.m").as("m"))
-      .persist()
+      .cached()
     val deg = nbrs.groupBy(col("n")).agg(count(lit(1)).as("deg"))
     val pairs = nbrs.select(col("n").as("a"), col("m"))
       .join(nbrs.select(col("n").as("b"), col("m")), "m")
@@ -1263,12 +1196,9 @@ object Graph {
         sum(expr("CAST(round(1000000 / ln(CAST(__dz AS DOUBLE))) " +
           "AS BIGINT)")).as("aa_micro"))
       .filter(col("common") >= minCommon)
-    val out = pairs
+    pairs
       .join(e.select(col("u").as("a"), col("v").as("b")), Seq("a", "b"),
         "left_anti")
-      .localCheckpoint(true)
-    nbrs.unpersist(false)
-    e.unpersist(false)
-    out
+      .pin()
   }
 }

@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -60,19 +61,6 @@ object Relational {
     if (gauge.rdd.getNumPartitions >= target) df
     else df.repartition(target, keys: _*)
   }
-
-  /** Release the RDD blocks behind an eagerly checkpointed frame —
-    * `DataFrame.unpersist` is a no-op on a checkpointed plan (the blocks
-    * hang off the materialized RDD, not the cache manager). The inline
-    * form predates this helper at the triangleCounts/edgeTriangleSupport
-    * sites; new release points go through here.
-    */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
 
   /** Data-derived partition count for the loop-invariant cached frames
     * of the iterative algorithms (guide §2.2 "fewer, larger reduce
@@ -148,7 +136,7 @@ object Relational {
       math.max(df.sparkSession.sessionState.conf.numShufflePartitions, 1)
     val base = if (skipIfSession && n >= sessionParts) df
                else df.repartition(n, col(key))
-    base.sortWithinPartitions(key).persist()
+    base.sortWithinPartitions(key).cached()
   }
 
   /** Shrink a PER-ROUND node-grain loop frame to the loop's derived
@@ -204,7 +192,7 @@ object Relational {
     val nPart = loopParts(df)
     val part = df.repartitionByRange(nPart, order: _*)
       .withColumn("__gr_pid", spark_partition_id())
-      .localCheckpoint(true)
+      .pin()
     val local = part.withColumn("__gr_local", row_number().over(
       Window.partitionBy(col("__gr_pid")).orderBy(order: _*)))
     val off = part.groupBy(col("__gr_pid"))
@@ -234,7 +222,7 @@ object Relational {
     val part = df.repartitionByRange(nPart, order: _*)
       .withColumn("__gc_w", weight.cast("long"))
       .withColumn("__gc_pid", spark_partition_id())
-      .localCheckpoint(true)
+      .pin()
     val local = part.withColumn("__gc_local", sum(col("__gc_w")).over(
       Window.partitionBy(col("__gc_pid")).orderBy(order: _*)
         .rowsBetween(Window.unboundedPreceding, 0)))
@@ -1044,7 +1032,7 @@ object Relational {
     */
   private[graft] def ecdfPaired(df: DataFrame, splitCol: String,
       refValue: String, valCol: String, lo: Double, hi: Double,
-      nBuckets: Int): DataFrame = {
+      nBuckets: Int): DataFrame = Pin.scoped {
     require(nBuckets >= 1 && hi > lo, "need a positive bucketed range")
     val width = (hi - lo) / nBuckets
     val zero = lit(0L)
@@ -1063,7 +1051,7 @@ object Relational {
       .select(col(splitCol).cast("string").as("__s"),
         col(valCol).cast("long").as("__v"))
       .groupBy("__s", "__v").agg(count(lit(1)).as("__t"))
-      .localCheckpoint(true)
+      .pin()
     val curSplits = c.filter(col("__s") =!= refValue)
       .select("__s").distinct()
     val refC = c.filter(col("__s") === refValue)
@@ -1083,7 +1071,7 @@ object Relational {
       .withColumn("__b", bucket)
       .withColumn("__local", sum(col("__t")).over(wLocal))
       .withColumn("__localr", sum(col("__tr")).over(wLocal))
-      .localCheckpoint(true)
+      .pin()
     val wOff = Window.partitionBy("__s").orderBy("__b")
       .rowsBetween(Window.unboundedPreceding, -1)
     val off = full.groupBy("__s", "__b")
@@ -1091,13 +1079,11 @@ object Relational {
       .withColumn("__off", coalesce(sum(col("__bt")).over(wOff), zero))
       .withColumn("__offr", coalesce(sum(col("__btr")).over(wOff), zero))
       .select("__s", "__b", "__off", "__offr")
-    val out = full.join(broadcast(off), Seq("__s", "__b"))
+    full.join(broadcast(off), Seq("__s", "__b"))
       .withColumn("__cum", col("__off") + col("__local"))
       .withColumn("__cumr", col("__offr") + col("__localr"))
       .select("__s", "__v", "__t", "__tr", "__cum", "__cumr")
-      .localCheckpoint(true)
-    releaseCheckpoint(full); releaseCheckpoint(c)
-    out
+      .pin()
   }
 
   /** Two-sample Kolmogorov–Smirnov drift report: for every split against
@@ -1626,10 +1612,10 @@ object Relational {
     * series. Callers with big groups pre-aggregate (e.g. daily means)
     * first. The ranked input is persisted through the self-join's two
     * branches (the audit rule), and the group-grain result is
-    * checkpointed so the cache can be released eagerly.
+    * checkpointed.
     */
   def theilSen(df: DataFrame, groupCols: Seq[String], xCol: String,
-      yCol: String, tiebreakCols: Seq[String]): DataFrame = {
+      yCol: String, tiebreakCols: Seq[String]): DataFrame = Pin.scoped {
     val w = Window.partitionBy(groupCols.map(col): _*)
       .orderBy((col(xCol).asc +: tiebreakCols.map(col(_).asc)): _*)
     val ranked = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
@@ -1638,7 +1624,7 @@ object Relational {
       // __rn now carries the (x, tiebreak) identity; the tiebreak columns
       // themselves stay out of the O(n²) pair frame
       .drop(tiebreakCols: _*)
-      .persist()
+      .cached()
     val a = ranked.select(groupCols.map(col) :+ col(xCol).as("__xa") :+
       col(yCol).as("__ya") :+ col("__rn").as("__ra"): _*)
     val b = ranked.select(groupCols.map(col) :+ col(xCol).as("__xb") :+
@@ -1650,7 +1636,7 @@ object Relational {
         (col("__xb") - col("__xa")).cast("double"), 6))
     val pick = Window.partitionBy(groupCols.map(col): _*)
       .orderBy(col("__slope").asc, col("__ra").asc, col("__rb").asc)
-    val out = slopes
+    slopes
       .withColumn("__k", row_number().over(pick))
       .withColumn("__np", count(lit(1)).over(
         Window.partitionBy(groupCols.map(col): _*)))
@@ -1659,9 +1645,7 @@ object Relational {
       .filter(col("__k") === expr("(__np + 1) DIV 2"))
       .select(groupCols.map(col) :+ col("__np").as("n_pairs") :+
         col("__slope").as("slope"): _*)
-      .localCheckpoint(true)
-    ranked.unpersist(false)
-    out
+      .pin()
   }
 
   /** Cohen's kappa from a pre-aggregated confusion/agreement matrix
@@ -1678,13 +1662,13 @@ object Relational {
     * cell-grain (≤ |A|·|B| rows) — the input is aggregated once by
     * [[cohenKappa]]'s raw-pairs face and never re-scanned (cells are
     * persisted through the three marginal branches, result
-    * checkpointed, cache released).
+    * checkpointed).
     */
   def cohenKappaFromCells(cellsIn: DataFrame, aCol: String, bCol: String,
-      nCol: String): DataFrame = {
+      nCol: String): DataFrame = Pin.scoped {
     val d38 = "decimal(38,0)"
     val cells = cellsIn.select(col(aCol).as("__a"), col(bCol).as("__b"),
-      col(nCol).cast(d38).as("__n")).persist()
+      col(nCol).cast(d38).as("__n")).cached()
     val tot = cells.agg(sum(col("__n")).as("__tot"),
       sum(when(col("__a") === col("__b"), col("__n"))
         .otherwise(lit(0).cast(d38))).as("__agree"))
@@ -1695,7 +1679,7 @@ object Relational {
     val chance = ma.join(mb, Seq("__cat"), "full_outer")
       .agg(sum(coalesce(col("__ma"), lit(0).cast(d38)) *
         coalesce(col("__mb"), lit(0).cast(d38))).as("__s"))
-    val out = tot.crossJoin(broadcast(chance))
+    tot.crossJoin(broadcast(chance))
       .select(col("__tot").cast("long").as("n"),
         col("__agree").cast("long").as("n_agree"),
         // DIV (integral quotient), not `/`: decimal division rounds at
@@ -1706,9 +1690,7 @@ object Relational {
           (col("__tot") * col("__agree") - col("__s")).cast("double") /
           (col("__tot") * col("__tot") - col("__s")).cast("double"), 6))
           .as("kappa"))
-      .localCheckpoint(true)
-    cells.unpersist(false)
-    out
+      .pin()
   }
 
   /** [[cohenKappaFromCells]] over raw rating pairs: rows where either
@@ -1990,7 +1972,7 @@ object Relational {
           .cast(dec).as("ssb"))
       // group-grain frame with TWO readers (ok + degenerate branches):
       // materialize once or the input is scanned per branch
-      .localCheckpoint(true)
+      .pin()
     val ok = welchDerivedSql.foldLeft(
       agg.filter(col("na") >= 2 && col("nb") >= 2)) {
       case (acc, (name, formula)) => acc.withColumn(name, expr(formula))
@@ -2120,7 +2102,7 @@ object Relational {
     */
   def hbosOutliers(df: DataFrame, idCol: String,
       features: Seq[(String, Double, Double, Int)],
-      k: Int): DataFrame = {
+      k: Int): DataFrame = Pin.scoped {
     require(features.nonEmpty && k >= 1, "need features and k >= 1")
     val d38 = "decimal(38,0)"
     val base = df.filter(col(idCol).isNotNull &&
@@ -2143,7 +2125,7 @@ object Relational {
         acc.withColumn(s"__b$i", least(greatest(
           floor((col(c).cast("double") - lo) / width), lit(0)),
           lit(nb - 1)).cast("int"))
-    }.localCheckpoint(true)
+    }.pin()
     val scored = features.zipWithIndex.foldLeft(binned) {
       case (acc, ((_, _, _, _), i)) =>
         val hist = binned.groupBy(col(s"__b$i"))
@@ -2161,21 +2143,14 @@ object Relational {
     // (non-ANSI) only at N^F >= 1e38; NULLs sorting FIRST ascending
     // would silently promote arbitrary rows into the top-k, so pin them
     // last (same magnitude-bound guard class as momentsSketch/cvm).
-    val out = scored.crossJoin(broadcast(tot))
+    scored.crossJoin(broadcast(tot))
       .withColumn("__crit", crit)
       .orderBy(col("__crit").asc_nulls_last, col("id"))
       .limit(k)
       .select((col("id").as(idCol) +:
         features.indices.map(i => col(s"c_$i"))) :+
         round(score, 6).as("score"): _*)
-      .localCheckpoint(true)
-    // release the pinned binned frame (its only readers are above)
-    binned.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-    out
+      .pin()
   }
 
   /** ECOD top-k outliers (Li et al., TKDE 2022): per numeric feature
@@ -2205,12 +2180,12 @@ object Relational {
     * corpus² anywhere.
     */
   def ecodOutliers(df: DataFrame, idCol: String, features: Seq[String],
-      k: Int): DataFrame = {
+      k: Int): DataFrame = Pin.scoped {
     require(features.nonEmpty && k >= 1, "need features and k >= 1")
     val base = df.filter(col(idCol).isNotNull &&
         features.map(col(_).isNotNull).reduce(_ && _))
       .select((col(idCol).as("id") +: features.map(col)): _*)
-      .persist()
+      .cached()
     val n1 = base.agg(count(lit(1)).as("__n"))
     var cur = base
     features.zipWithIndex.foreach { case (f, i) =>
@@ -2227,7 +2202,7 @@ object Relational {
       .map(i => expr(term(s"__l$i"))).reduce(_ + _)
     val scoreR = features.indices
       .map(i => expr(term(s"__n - __l$i + __k$i"))).reduce(_ + _)
-    val out = cur.crossJoin(broadcast(n1))
+    cur.crossJoin(broadcast(n1))
       .withColumn("score_left", scoreL)
       .withColumn("score_right", scoreR)
       .withColumn("ecod_micro",
@@ -2239,9 +2214,7 @@ object Relational {
       .select((col("id").as(idCol) +: features.map(col)) ++
         Seq(col("score_left"), col("score_right"), col("ecod_micro"),
           col("rank")): _*)
-      .localCheckpoint(true)
-    base.unpersist(false)
-    out
+      .pin()
   }
 
   /** Shared engine/oracle difference-in-differences fragments over the
@@ -2917,12 +2890,12 @@ object Relational {
     * anovaF's single aggregate. Two scans of the value column total.
     */
   def brownForsytheF(df: DataFrame, groupCol: String,
-      valueCol: String, scale: Long = 1000000L): DataFrame = {
+      valueCol: String, scale: Long = 1000000L): DataFrame = Pin.scoped {
     require(scale > 0, "scale must be positive")
     val base = df.filter(col(valueCol).isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).cast("string").as("__g"),
         col(valueCol).cast("long").as("__x"))
-      .persist()
+      .cached()
     val byVal = base.groupBy(col("__g"), col("__x"))
       .agg(count(lit(1)).as("__c"))
     val w = org.apache.spark.sql.expressions.Window
@@ -2937,9 +2910,7 @@ object Relational {
       .select(col("__g"),
         expr(s"CAST(CAST(abs(__x - __med) AS DECIMAL(32,6)) / $scale" +
           " AS DECIMAL(18,6))").as("__z"))
-    val out = anovaF(z, "__g", "__z").localCheckpoint(true)
-    base.unpersist(false)
-    out
+    anovaF(z, "__g", "__z").pin()
   }
 
   /** Shared Spark/DuckDB fragment for the Cochran–Armitage z² — the
@@ -3048,7 +3019,7 @@ object Relational {
     val d38 = "decimal(38,0)"
     val v = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .select(col(xCol).as("__x"), col(yCol).as("__y"))
-      .persist()
+      .cached()
     def ranks(c: String): DataFrame = {
       val counts = v.groupBy(col(c)).agg(count(lit(1)).as("__c"))
       globalCumSum(counts, Seq(col(c)), col("__c"), "__cum")
@@ -4338,7 +4309,7 @@ object Relational {
     val series = df.filter(col(tCol).isNotNull && col(xCol).isNotNull)
       .select(col(tCol).cast("long").as("__t"),
         col(xCol).cast("long").as("__xv"))
-      .persist()
+      .cached()
     val nSeries = series.count()
     require(nSeries <= maxSeries,
       s"saxMotifs: series has $nSeries rows > maxSeries=$maxSeries - " +
@@ -4402,7 +4373,7 @@ object Relational {
     val series = df.filter(col(tCol).isNotNull && col(xCol).isNotNull)
       .select(col(tCol).cast("long").as("__t"),
         col(xCol).cast("long").as("__xv"))
-      .persist()
+      .cached()
     val nSeries = series.count()
     require(nSeries <= maxSeries,
       s"matrixProfile: series has $nSeries rows > maxSeries=" +
@@ -4513,7 +4484,7 @@ object Relational {
     val order = col("__xo") +: tiebreakCols.map(col)
     val part = withR.repartitionByRange(nPart, order: _*)
       .withColumn("__gc_pid", spark_partition_id())
-      .localCheckpoint(true)
+      .pin()
     // ONE window pass yields the within-partition adjacency sum AND
     // both boundary endpoints (min_by/max_by on the order key) — the
     // ≤ numShufflePartitions result is pinned so its three readers
@@ -4526,7 +4497,7 @@ object Relational {
           abs(col("__le") - col("__prev")))), lit(0L)).as("__sl"),
         min_by(col("__le"), struct(order: _*)).as("__leF"),
         max_by(col("__le"), struct(order: _*)).as("__leL"))
-      .localCheckpoint(true)
+      .pin()
     val localAbs = perPart
       .agg(coalesce(sum(col("__sl")), lit(0L)).as("__sLocal"))
     // cross-boundary pairs: |first(le) of the next non-empty partition
@@ -4586,7 +4557,7 @@ object Relational {
     val series = df.filter(col(tCol).isNotNull && col(xCol).isNotNull)
       .select(col(tCol).cast("long").as("__t"),
         col(xCol).cast("long").as("__xv"))
-      .persist()
+      .cached()
     val nSeries = series.count()
     require(nSeries <= maxSeries,
       s"mannKendall: series has $nSeries rows > maxSeries=$maxSeries - " +
@@ -4912,7 +4883,7 @@ object Relational {
     val nPart = loopParts(rows)
     val part = vGrain.repartitionByRange(nPart, col("__v"))
       .withColumn("__gc_pid", spark_partition_id())
-      .localCheckpoint(true)
+      .pin()
     val w = Window.partitionBy(col("__gc_pid")).orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, 0)
     val local = (0 until k).foldLeft(part) { (f, i) =>
@@ -5186,7 +5157,7 @@ object Relational {
     val cells = df.filter(col(xCol).isNotNull && col(yCol).isNotNull)
       .groupBy(col(xCol).as("__x"), col(yCol).as("__y"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .pin()
     val tot = cells.agg(coalesce(sum(col("__c")), lit(0L)).as("n"))
     val margX = cells.groupBy(col("__x"))
       .agg(sum(col("__c")).as("__cx"))
@@ -5345,7 +5316,7 @@ object Relational {
     val byKey = df.filter(col(keyCol).isNotNull && col(wCol).isNotNull)
       .groupBy(col(keyCol).as("__k"))
       .agg(sum(col(wCol).cast("long")).as("__w"))
-      .localCheckpoint(true)
+      .pin()
     val tot = byKey.agg(count(lit(1)).as("n_keys"),
       coalesce(sum(col("__w")), lit(0L)).as("w_total"),
       coalesce(sum(col("__w").cast(d38) * col("__w")),
@@ -5387,7 +5358,7 @@ object Relational {
         col(treatCol).isNotNull && col(valCol).isNotNull)
       .groupBy(col(itemCol).as("__it"), col(treatCol).as("__tr"))
       .agg(max(col(valCol).cast("boolean").cast("long")).as("__s"))
-      .localCheckpoint(true)
+      .pin()
     val kf = cell.select(col("__tr")).distinct()
       .agg(count(lit(1)).as("k"))
     val perItem = cell.groupBy(col("__it"))
@@ -5395,7 +5366,7 @@ object Relational {
     val kept = perItem.crossJoin(broadcast(kf))
       .filter(col("__m") === col("k"))
       .select(col("__it"), col("__r"))
-      .localCheckpoint(true)
+      .pin()
     val rows = kept.agg(count(lit(1)).as("n_items"),
       coalesce(sum(col("__r")), lit(0L)).as("n_success"),
       coalesce(sum(col("__r").cast(d38) * col("__r")),
@@ -5440,7 +5411,7 @@ object Relational {
       .groupBy(col(xCol).cast("long").as("__x"),
         col(yCol).cast("long").as("__y"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint(true)
+      .pin()
     val nCells = cells.count()
     require(nCells <= maxCells,
       s"somersGamma: $nCells distinct (x, y) cells > maxCells=" +
@@ -5496,7 +5467,7 @@ object Relational {
       .groupBy(col(idCol).as("__id"), col(itemCol).as("__itm"))
       .agg(count(lit(1)).as("__dup"),
         sum(col(scoreCol).cast("long")).as("__v"))
-      .localCheckpoint(true)
+      .pin()
     val kf = cell.select(col("__itm")).distinct()
       .agg(count(lit(1)).as("k"))
     val perSubj = cell.groupBy(col("__id"))
@@ -5505,7 +5476,7 @@ object Relational {
     val kept = perSubj.crossJoin(broadcast(kf))
       .filter(col("__m") === col("k") && col("__dmax") === 1)
       .select(col("__id"), col("__t"))
-      .localCheckpoint(true)
+      .pin()
     val nRow = kept.agg(count(lit(1)).as("n_subjects"),
       coalesce(sum(col("__t")), lit(0L)).as("__st"),
       coalesce(sum(col("__t").cast(d38) * col("__t")),
@@ -5649,7 +5620,7 @@ object Relational {
     // ≤ numShufflePartitions-row offset aggregate)
     val part = base.repartitionByRange(nPart, ord: _*)
       .withColumn("__gc_pid", spark_partition_id())
-      .localCheckpoint(true)
+      .pin()
     val w = Window.partitionBy(col("__gc_pid")).orderBy(ord: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
     val local = part

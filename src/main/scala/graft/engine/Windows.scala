@@ -1,5 +1,6 @@
 package graft.engine
 
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -276,10 +277,10 @@ object Windows {
     // anyway and the extra exchange was pure cost)
     val tr = transitionCounts(df, keyCol, timeCol, stateCol, tiebreakCols)
       .select(col("from_state"), col("to_state"), col("p_ppm"))
-      .localCheckpoint(true)
+      .pin()
     val states = tr.select(
         explode(array(col("from_state"), col("to_state"))).as("state"))
-      .distinct().localCheckpoint(true)
+      .distinct().pin()
     (tr, states)
   }
 
@@ -402,7 +403,7 @@ object Windows {
     val perState = pi.join(hState, Seq("state"), "left")
       .withColumn("h_state_micro",
         coalesce(col("h_state_micro"), lit(0L)))
-      .localCheckpoint(true)
+      .pin()
     val total = perState.agg(coalesce(sum(expr(
         "CAST(round(CAST(pi_ppm AS DOUBLE) * h_state_micro / 1000000) " +
           "AS BIGINT)")), lit(0L)).as("entropy_rate_micro"))
@@ -1312,10 +1313,10 @@ object Windows {
     * per-entity sort; skew on hot entities is one aggregate key.
     */
   def funnelSteps(events: DataFrame, keyCol: String, timeCol: String,
-      typeCol: String, steps: Seq[String]): DataFrame = {
+      typeCol: String, steps: Seq[String]): DataFrame = Pin.scoped {
     require(steps.nonEmpty, "need at least one funnel step")
     val base = events.select(col(keyCol), col(timeCol), col(typeCol))
-      .persist()
+      .cached()
     var cur = base.filter(col(typeCol) === steps.head)
       .groupBy(col(keyCol)).agg(min(col(timeCol)).as("t1"))
     for (i <- 2 to steps.size) {
@@ -1326,12 +1327,10 @@ object Windows {
         .agg(min(when(col("__ts") > col(s"t${i - 1}"), col("__ts")))
           .as(s"t$i"))
     }
-    val out = cur.withColumn("n_completed",
+    cur.withColumn("n_completed",
         steps.indices.map(i => when(col(s"t${i + 1}").isNotNull, 1)
           .otherwise(0)).reduce(_ + _))
-      .localCheckpoint(true)
-    base.unpersist(false)
-    out
+      .pin()
   }
 
   /** Rolling Pearson correlation over a trailing `n`-row window per

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.engine.Pin
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -254,7 +256,7 @@ object Dedup {
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
       bits: Int = 64, bands: Int = 4, maxHamming: Int = 3,
       maxBucket: Int = 1000,
-      tokenHashesFn: Column => Column = tokenHashes64): DataFrame = {
+      tokenHashesFn: Column => Column = tokenHashes64): DataFrame = Pin.scoped {
     require(maxHamming < bands,
       "pigeonhole only guarantees recall for hamming < bands")
     val banded = simhashBanded(docs, idCol, textCol, bits, bands,
@@ -263,22 +265,20 @@ object Dedup {
     // unpersisted, the tokenize→simhash→explode→hot-bucket-window chain
     // executed once per branch (the prefixFilterCandidates finding).
     // Persist it; the candidate pair list (≪ corpus by the banding
-    // contract) checkpoints eagerly so the cache releases at return.
+    // contract) checkpoints eagerly.
     val pruned = pruneHotBuckets(banded, Seq("band", "slice"), maxBucket)
-      .persist()
+      .cached()
     val a = pruned.select(col("band"), col("slice"), col("doc").as("doc_a"),
       col("sh").as("sh_a"))
     val b = pruned.select(col("band"), col("slice"), col("doc").as("doc_b"),
       col("sh").as("sh_b"))
-    val out = a.join(b, Seq("band", "slice"))
+    a.join(b, Seq("band", "slice"))
       .filter(col("doc_a") < col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         hammingDist(col("sh_a"), col("sh_b")).as("hamming"))
       .distinct()
       .filter(col("hamming") <= maxHamming)
-      .localCheckpoint(true)
-    pruned.unpersist(false)
-    out
+      .pin()
   }
 
   /** Sorted-neighborhood near-dup candidates — the third candidate-pair
@@ -395,11 +395,11 @@ object Dedup {
     * Output: (doc_a, doc_b, jaccard ≥ t) — verified, not candidates.
     *
     * @note EXECUTES EAGERLY (r14): the verified pair list is
-    *       localCheckpointed at return so the shingle and prefix caches
-    *       release here — the [[verifiedPairs]] contract.
+    *       checkpointed at return — the [[verifiedPairs]] contract.
     */
   def prefixFilterCandidates(docs: DataFrame, idCol: String,
-      textCol: String, shingleWidth: Int, minJaccard: Double): DataFrame = {
+      textCol: String, shingleWidth: Int,
+      minJaccard: Double): DataFrame = Pin.scoped {
     require(minJaccard > 0 && minJaccard <= 1,
       s"minJaccard in (0,1], got $minJaccard")
     // r14: the shingle frame feeds THREE consumers (the prefix stream and
@@ -407,9 +407,8 @@ object Dedup {
     // self-join branches — unpersisted, the plan embedded the whole
     // tokenize→shingle chain three times and the df-rank window chain
     // twice (guide §2.4: the same subtree behind every broadcast build is
-    // still a full re-execution). Persist both; the eager checkpoint of
-    // the bounded verified-pair list below releases them at return.
-    val sets = shingleSets(docs, idCol, textCol, shingleWidth).persist()
+    // still a full re-execution). Persist both.
+    val sets = shingleSets(docs, idCol, textCol, shingleWidth).cached()
     // `hs` is a DISTINCT hash set (ShingleHashes dedups), so the per-doc
     // token count is size(hs) read off the array — the former
     // count-over-(doc) window was a second windowed pass over the same
@@ -425,7 +424,7 @@ object Dedup {
       .filter(col("__rk") <=
         col("__n") - ceil(lit(minJaccard) * col("__n")) + 1)
       .select(col("doc"), col("h"), col("__rk"), col("__n"))
-      .persist()
+      .cached()
     // Exact PPJoin pruning on the candidate stream (same paper): the
     // LENGTH filter (J ≥ t forces min(na,nb) ≥ t·max(na,nb)) and the
     // PREFIX-POSITIONAL bound (overlap ≤ 1 + min(na−i, nb−j) at the
@@ -448,10 +447,9 @@ object Dedup {
       .select(col("a.doc").as("doc_a"), col("b.doc").as("doc_b"))
       .distinct()
     // verified pair list ≪ corpus at any real dup rate: checkpoint it
-    // EAGERLY (one job) so the two caches above release here instead of
-    // pinning executor storage for the session lifetime — the
-    // verifiedPairs idiom; callers see the same rows, just materialized.
-    val out = pairs
+    // EAGERLY (one job), so nothing the caller runs reads the caches —
+    // the verifiedPairs idiom; callers see the same rows, materialized.
+    pairs
       .join(sets.select(col("doc").as("doc_a"), col("hs").as("__sa")),
         Seq("doc_a"))
       .join(sets.select(col("doc").as("doc_b"), col("hs").as("__sb")),
@@ -459,10 +457,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         round(jaccard(col("__sa"), col("__sb")), 6).as("jac"))
       .filter(col("jac") >= minJaccard)
-      .localCheckpoint(true)
-    prefixes.unpersist(false)
-    sets.unpersist(false)
-    out
+      .pin()
   }
 
   /** Bounded-output production face of [[prefixFilterCandidates]]: the
@@ -550,7 +545,7 @@ object Dedup {
     * survivor for keep-one-per-cluster dedup.
     */
   def duplicateClusters(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 10): DataFrame = {
+      maxIter: Int = 10): DataFrame = Pin.scoped {
     // partitioned AND sorted on the per-round join key (r13): every
     // round joins edges on dst — a (src,dst)-hash cache re-exchanged
     // and re-sorted the edge-grain frame once per round; cached plans
@@ -576,7 +571,7 @@ object Dedup {
       .agg(min(col("dst")).as("__mn"))
       .select(col("src").as("doc"),
         least(col("src"), col("__mn")).as("cluster"))
-      .localCheckpoint()
+      .pin()
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -608,14 +603,13 @@ object Dedup {
         .select(col("doc"), col("old"),
           least(col("cluster"), coalesce(col("rep_cluster"), col("cluster")))
             .as("cluster"))
-        .localCheckpoint(false)
+        .pin(eager = false)
       val changed = next.filter(col("cluster") =!= col("old")).count()
-      labels.unpersist() // release the previous round's checkpoint blocks
+      Pin.release(labels)
       labels = next.drop("old")
       converged = changed == 0
       iter += 1
     }
-    edges.unpersist()
     labels
   }
 
@@ -644,8 +638,8 @@ object Dedup {
     * pairs carry their heavy hash arrays through a shuffle — at 100 TB
     * candidates ≪ corpus, so the verify join moves a sliver of the data.
     * The verified pair list (≪ corpus at any real dup rate) is
-    * checkpointed eagerly so both caches release HERE instead of pinning
-    * executor storage for the session lifetime (the cornerSnapClip idiom).
+    * checkpointed eagerly, so no later reader needs the caches (the
+    * cornerSnapClip idiom).
     *
     * @note EXECUTES EAGERLY: the whole shingle→LSH→verify pipeline runs
     *       when this method is CALLED (the checkpoint materializes it),
@@ -655,10 +649,10 @@ object Dedup {
     */
   def fuzzyDuplicates(docs: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, k: Int = 16, bands: Int = 4,
-      minJaccard: Double = 0.7): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol, shingleWidth).persist()
+      minJaccard: Double = 0.7): DataFrame = Pin.scoped {
+    val sets = shingleSets(docs, idCol, textCol, shingleWidth).cached()
     val cands = minhashCandidatesFromSets(sets, k, bands,
-      minEstJaccard = 0.3).persist()
+      minEstJaccard = 0.3).cached()
     // both endpoints in ONE pass over cands (r13 explode idiom): the
     // two-branch union's first job RACES the lazy cands cache — each
     // branch recomputed the whole LSH subtree (measured on q60: two
@@ -667,16 +661,13 @@ object Dedup {
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc"))
       .distinct()
     val needed = sets.join(involved, Seq("doc"), "left_semi")
-    val verified = cands
+    cands
       .join(needed.select(col("doc").as("doc_a"), col("hs").as("set_a")), "doc_a")
       .join(needed.select(col("doc").as("doc_b"), col("hs").as("set_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         jaccard(col("set_a"), col("set_b")).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
-      .localCheckpoint()
-    sets.unpersist()
-    cands.unpersist()
-    verified
+      .pin()
   }
 
   /** LSH calibration report — the tuning instrument for the
@@ -688,16 +679,17 @@ object Dedup {
     * [[graft.llm.Similarity.recallAtK]]: recall@k instruments the ANN
     * index, this instruments the signature estimator (how tight is the
     * estimate near the action threshold; how often does banding surface
-    * a pair the exact metric would reject). Same persist-once /
-    * checkpoint / release dataflow as [[fuzzyDuplicates]] — the exact
+    * a pair the exact metric would reject). Same cache-once / pin
+    * dataflow as [[fuzzyDuplicates]] — the exact
     * sets ride the verify join only for surfaced candidates.
     */
   def lshCalibration(docs: DataFrame, idCol: String, textCol: String,
       shingleWidth: Int = 3, k: Int = 16, bands: Int = 4,
-      minEstJaccard: Double = 0.25, maxBucket: Int = 1000): DataFrame = {
-    val sets = shingleSets(docs, idCol, textCol, shingleWidth).persist()
+      minEstJaccard: Double = 0.25,
+      maxBucket: Int = 1000): DataFrame = Pin.scoped {
+    val sets = shingleSets(docs, idCol, textCol, shingleWidth).cached()
     val cands = minhashCandidatesFromSets(sets, k, bands, minEstJaccard,
-      maxBucket).persist()
+      maxBucket).cached()
     // both endpoints in ONE pass over cands (r13 explode idiom): the
     // two-branch union's first job RACES the lazy cands cache — each
     // branch recomputed the whole LSH subtree (measured on q60: two
@@ -706,7 +698,7 @@ object Dedup {
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc"))
       .distinct()
     val needed = sets.join(involved, Seq("doc"), "left_semi")
-    val out = cands
+    cands
       .join(needed.select(col("doc").as("doc_a"), col("hs").as("set_a")), "doc_a")
       .join(needed.select(col("doc").as("doc_b"), col("hs").as("set_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
@@ -714,10 +706,7 @@ object Dedup {
         round(jaccard(col("set_a"), col("set_b")) * 1000000).cast("long")
           .as("exact_ppm"))
       .withColumn("err_ppm", abs(col("est_ppm") - col("exact_ppm")))
-      .localCheckpoint()
-    sets.unpersist()
-    cands.unpersist()
-    out
+      .pin()
   }
 
   /** Similarity-BAND pair mining — similar-but-not-duplicate pairs, the

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.engine.Pin
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.{DataFrame, functions => F}
 import org.apache.spark.sql.functions._
 
@@ -94,12 +96,10 @@ object Density {
     * `noise`.
     */
   def dbscanCore(points: DataFrame, idCol: String, xCol: String,
-      yCol: String, epsMicro: Long, minPts: Int): DataFrame = {
+      yCol: String, epsMicro: Long, minPts: Int): DataFrame = Pin.scoped {
     val nbrs = epsNeighborPairs(points, idCol, xCol, yCol, epsMicro)
-      .persist()
-    val out = dbscanCoreFromPairs(points, idCol, nbrs, minPts)
-    nbrs.unpersist(false)
-    out
+      .cached()
+    dbscanCoreFromPairs(points, idCol, nbrs, minPts)
   }
 
   /** [[dbscanCore]] over a PRE-BUILT eps-neighbor frame `(a, b)` —
@@ -109,33 +109,31 @@ object Density {
     * that checkpoint instead of re-running the 9-cell join.
     */
   def dbscanCoreFromPairs(points: DataFrame, idCol: String,
-      nbrs: DataFrame, minPts: Int): DataFrame = {
+      nbrs: DataFrame, minPts: Int): DataFrame = Pin.scoped {
     require(minPts >= 1, "minPts must be positive")
     // node-grain, two readers (the core-id broadcast build and the final
     // left join's stream side) — eager checkpoint so the independent
     // stages scan blocks instead of racing a lazy plan (the
-    // duplicate-subtree class), released once the output is pinned
+    // duplicate-subtree class)
     val counts = points.select(col(idCol).as("id"))
       .join(nbrs.groupBy(col("a").as("id"))
         .agg(count(lit(1)).as("__c")), Seq("id"), "left")
       .withColumn("n_eps", coalesce(col("__c"), lit(0L)) + 1L)
       .select(col("id"), col("n_eps"))
-      .localCheckpoint(true)
+      .pin()
     val coreIds = counts.filter(col("n_eps") >= minPts)
       .select(col("id").as("__core"))
     val hasCoreNbr = nbrs
       .join(coreIds, nbrs("b") === coreIds("__core"), "left_semi")
       .select(col("a").as("id")).distinct()
       .withColumn("__nearCore", lit(true))
-    val out = counts.join(hasCoreNbr, Seq("id"), "left")
+    counts.join(hasCoreNbr, Seq("id"), "left")
       .withColumn("role",
         when(col("n_eps") >= minPts, lit("core"))
           .when(col("__nearCore"), lit("border"))
           .otherwise(lit("noise")))
       .select(col("id"), col("n_eps"), col("role"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(counts)
-    out
+      .pin()
   }
 
   /** Full DBSCAN labeling: `(id, role, cluster)` — clusters are the
@@ -147,13 +145,11 @@ object Density {
     * engine cannot reproduce); noise reports a null cluster.
     */
   def dbscanClusters(points: DataFrame, idCol: String, xCol: String,
-      yCol: String, epsMicro: Long, minPts: Int): DataFrame = {
+      yCol: String, epsMicro: Long, minPts: Int): DataFrame = Pin.scoped {
     val nbrs = epsNeighborPairs(points, idCol, xCol, yCol, epsMicro)
-      .persist()
-    val out = dbscanClustersFromPairsGeo(points, idCol, xCol, yCol,
+      .cached()
+    dbscanClustersFromPairsGeo(points, idCol, xCol, yCol,
       epsMicro, nbrs, minPts)
-    nbrs.unpersist(false)
-    out
   }
 
   /** [[dbscanClusters]] over a PRE-BUILT eps-neighbor frame — see
@@ -195,7 +191,7 @@ object Density {
 
   private def dbscanClustersImpl(points: DataFrame, idCol: String,
       nbrs: DataFrame, minPts: Int,
-      geom: Option[(String, String, Long)]): DataFrame = {
+      geom: Option[(String, String, Long)]): DataFrame = Pin.scoped {
     require(minPts >= 1, "minPts must be positive")
     // every multi-reader frame here is EAGERLY checkpointed (r14): the
     // readers are broadcast builds and semi-joins that run as independent
@@ -209,10 +205,9 @@ object Density {
       .join(nbrs.groupBy(col("a").as("id"))
         .agg(count(lit(1)).as("__c")), Seq("id"), "left")
       .withColumn("n_eps", coalesce(col("__c"), lit(0L)) + 1L)
-      .localCheckpoint(true)
+      .pin()
     val core = counts.filter(col("n_eps") >= minPts).select(col("id"))
-      .localCheckpoint(true)
-    var subCached: Option[DataFrame] = None
+      .pin()
     val ccInput = geom match {
       case None =>
         nbrs
@@ -231,8 +226,7 @@ object Density {
             expr(s"(CAST($yCol AS BIGINT) + ${Shift}L) DIV ${s}L")
               .as("__sy"))
           .join(core, Seq("id"), "left_semi")
-          .localCheckpoint(true)
-        subCached = Some(sub)
+          .pin()
         // in-cell star: every core links to its sub-cell's min core id
         // (a genuine ε-pair by the 2s² ≤ eps² bound)
         val rep = sub.groupBy(col("__sx"), col("__sy"))
@@ -257,13 +251,12 @@ object Density {
     }
     val comps = graft.engine.Graph.connectedComponents(
       ccInput, "a", "b")
-    subCached.foreach(graft.engine.Relational.releaseCheckpoint)
     val coreClusters = core
       .join(comps.select(col("node").as("id"), col("component")),
         Seq("id"), "left")
       .select(col("id"),
         coalesce(col("component"), col("id")).as("cluster"))
-      .localCheckpoint(true)
+      .pin()
     val coreSide = coreClusters.select(col("id").as("__bid"),
       col("cluster").as("__bc"))
     val borderClusters = nbrs
@@ -274,7 +267,7 @@ object Density {
       .agg(min(struct(col("__bid"), col("__bc"))).as("__m"))
       .select(col("id"), col("__m.__bc").as("cluster"))
       .join(core, Seq("id"), "left_anti")
-    val out = counts
+    counts
       .join(coreClusters.select(col("id"), col("cluster").as("__cc")),
         Seq("id"), "left")
       .join(borderClusters.select(col("id"), col("cluster").as("__bcl")),
@@ -285,10 +278,6 @@ object Density {
           .otherwise(lit("noise")))
       .select(col("id"), col("role"),
         coalesce(col("__cc"), col("__bcl")).as("cluster"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(coreClusters)
-    graft.engine.Relational.releaseCheckpoint(core)
-    graft.engine.Relational.releaseCheckpoint(counts)
-    out
+      .pin()
   }
 }

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.engine.Pin
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -178,7 +180,7 @@ object Lexical {
           size(filter(col("__w"), x => x === lit(t))).cast("long")
             .as(s"__c$i")
         }: _*)
-      .localCheckpoint(true)
+      .pin()
     // model row: corpus token count + per-term corpus frequencies —
     // 1 row, broadcast; reads the checkpoint blocks, not the corpus
     val stats = base.agg(
@@ -550,7 +552,7 @@ object Lexical {
       .select(col("__b"), log(col("__ct").cast("double")).as("__lx"),
         log(col("__cv").cast("double")).as("__ly"))
       .withColumn("__g", lit(1))
-      .localCheckpoint(true)
+      .pin()
     graft.engine.Relational.theilSen(pts, Seq("__g"), "__lx", "__ly",
         Seq("__b"))
       .crossJoin(broadcast(pts.select(count(lit(1)).as("n_points"))))
@@ -595,7 +597,7 @@ object Lexical {
       .groupBy(col("__w1")).agg(count(lit(1)).as("__c1"))
       // eager: the broadcast V build and the model join race a lazy
       // cache (the ecdfPaired race class)
-      .localCheckpoint(true)
+      .pin()
     val vRow = uni.agg(count(lit(1)).as("__V"))
     val dg = docs.select(col(idCol).as("__id"),
         explode(graft.functions.TokenNgrams.tokenNgrams(col(textCol), 2))
@@ -603,7 +605,7 @@ object Lexical {
       .groupBy(col("__id"), col("gram")).agg(count(lit(1)).as("__cnt"))
       // eager: the model aggregate and the scoring probe read this in
       // the same job
-      .localCheckpoint(true)
+      .pin()
     val model = dg.groupBy(col("gram")).agg(sum(col("__cnt")).as("__c2"))
       .withColumn("__w1", substring_index(col("gram"), " ", 1))
       .join(uni, Seq("__w1"))
@@ -648,7 +650,7 @@ object Lexical {
     * stream is exploded once and never re-shuffled.
     */
   def kneserNeyBigrams(docs: DataFrame, idCol: String, textCol: String,
-      minCount: Long): DataFrame = {
+      minCount: Long): DataFrame = Pin.scoped {
     require(minCount >= 1, "minCount must be positive")
     val d38 = "decimal(38,0)"
     val grams = docs
@@ -660,13 +662,13 @@ object Lexical {
       // eager: both marginal aggregates, the broadcast B build and the
       // probe side read this concurrently inside the out build (the
       // ecdfPaired race class)
-      .localCheckpoint(true)
+      .pin()
     val left = grams.groupBy(col("__u"))
       .agg(sum(col("c_uv")).as("c_u"), count(lit(1)).as("n1_fwd"))
     val right = grams.groupBy(col("__v"))
       .agg(count(lit(1)).as("n1_back"))
     val bRow = grams.agg(count(lit(1)).as("__B"))
-    val out = grams.filter(col("c_uv") >= minCount)
+    grams.filter(col("c_uv") >= minCount)
       .join(left, Seq("__u"))
       .join(right, Seq("__v"))
       .crossJoin(broadcast(bRow))
@@ -676,9 +678,7 @@ object Lexical {
             s"(CAST(c_u AS $d38) * __B)")).cast("long"))
       .select(col("gram"), col("c_uv"), col("c_u"), col("n1_fwd"),
         col("n1_back"), col("p_kn_micro"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(grams)
-    out
+      .pin()
   }
 
   /** Top-k PMI collocations (Church & Hanks 1990) — bigrams whose
@@ -702,7 +702,7 @@ object Lexical {
     * the minCount-filtered model frame (Heaps-sublinear).
     */
   def pmiCollocations(docs: DataFrame, textCol: String, minCount: Long,
-      topK: Int): DataFrame = {
+      topK: Int): DataFrame = Pin.scoped {
     require(minCount >= 1 && topK >= 1, "need positive minCount/topK")
     val grams = docs
       .select(explode(graft.functions.TokenNgrams.tokenNgrams(
@@ -711,11 +711,11 @@ object Lexical {
       .withColumn("__u", substring_index(col("gram"), " ", 1))
       .withColumn("__v", substring_index(col("gram"), " ", -1))
       // eager — the kneserNeyBigrams rationale
-      .localCheckpoint(true)
+      .pin()
     val left = grams.groupBy(col("__u")).agg(sum(col("c_uv")).as("c_u"))
     val right = grams.groupBy(col("__v")).agg(sum(col("c_uv")).as("c_v"))
     val nRow = grams.agg(sum(col("c_uv")).as("__N"))
-    val out = grams.filter(col("c_uv") >= minCount)
+    grams.filter(col("c_uv") >= minCount)
       .join(left, Seq("__u")).join(right, Seq("__v"))
       .crossJoin(broadcast(nRow))
       .withColumn("pmi_micro", expr(
@@ -728,9 +728,7 @@ object Lexical {
           .orderBy(desc("pmi_micro"), asc("gram"))))
       .select(col("gram"), col("c_uv"), col("c_u"), col("c_v"),
         col("pmi_micro"), col("rank").cast("int").as("rank"))
-      .localCheckpoint(true)
-    graft.engine.Relational.releaseCheckpoint(grams)
-    out
+      .pin()
   }
 
   /** Skip-gram co-occurrence PMI — [[pmiCollocations]] widened from
@@ -752,7 +750,7 @@ object Lexical {
     * self-join/shuffle at all); everything downstream is model-grain.
     */
   def skipgramPmi(docs: DataFrame, idCol: String, textCol: String,
-      window: Int, minCount: Long, topK: Int): DataFrame = {
+      window: Int, minCount: Long, topK: Int): DataFrame = Pin.scoped {
     require(window >= 1 && minCount >= 1 && topK >= 1,
       "need positive window/minCount/topK")
     // r14: the window pairs come straight off each document's token array
@@ -779,11 +777,11 @@ object Lexical {
       // broadcast N build, the probe side) raced the lazy cache and
       // re-executed the tokenize+generate+aggregate chain per reader
       // (the ecdfPaired race class)
-      .localCheckpoint(true)
+      .pin()
     val left = pairs.groupBy(col("w1")).agg(sum(col("n_pair")).as("c_w1"))
     val right = pairs.groupBy(col("w2")).agg(sum(col("n_pair")).as("c_w2"))
     val nRow = pairs.agg(sum(col("n_pair")).as("__N"))
-    val out = pairs.filter(col("n_pair") >= minCount)
+    pairs.filter(col("n_pair") >= minCount)
       .join(left, Seq("w1")).join(right, Seq("w2"))
       .crossJoin(broadcast(nRow))
       .withColumn("pmi_micro", expr(
@@ -796,9 +794,7 @@ object Lexical {
           .orderBy(desc("pmi_micro"), asc("w1"), asc("w2"))))
       .select(col("w1"), col("w2"), col("n_pair"), col("c_w1"),
         col("c_w2"), col("pmi_micro"), col("rank").cast("int").as("rank"))
-      .localCheckpoint(true)
-    pairs.unpersist(false)
-    out
+      .pin()
   }
 
   /** Byte-pair-encoding merge TRAINING (Sennrich et al. 2016) — the
@@ -823,32 +819,23 @@ object Lexical {
     * in corpus size), built from one corpus scan and localCheckpointed
     * per round; each round is one vocab-grain explode + aggregate. The
     * per-round winner is a one-row collect — driver work O(merges), the
-    * timeBounds-row class. Each round's EAGER checkpoint releases the
-    * previous round's blocks as soon as it lands (and the last one on
-    * exit), so block-manager residency stays ONE vocab frame regardless
-    * of `merges` — round N+1 never re-reads round N−1.
+    * timeBounds-row class. Each round releases the previous round's
+    * pin once its own has landed, so block-manager residency stays ONE
+    * vocab frame regardless of `merges` — round N+1 never re-reads
+    * round N−1.
     */
   def bpeTrain(docs: DataFrame, textCol: String,
-      merges: Int): DataFrame = {
+      merges: Int): DataFrame = Pin.scoped {
     require(merges >= 1, "merges must be positive")
     val spark = docs.sparkSession
     import spark.implicits._
-    // unpersist the checkpoint RDD(s) behind an eagerly-checkpointed
-    // frame (LogicalRDD leaves) — safe once a successor checkpoint has
-    // materialized
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed.foreach {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false)
-        case _ => ()
-      }
     var vocab = docs
       .select(explode(Text.tokens(col(textCol))).as("__w"))
       .filter(length(col("__w")) >= 2)
       .groupBy(col("__w")).agg(count(lit(1)).as("__f"))
       .select(expr("array_join(transform(sequence(1, char_length(__w)), " +
         "i -> substring(__w, i, 1)), ' ')").as("__syms"), col("__f"))
-      .localCheckpoint(true)
+      .pin()
     val steps = scala.collection.mutable.ArrayBuffer.empty[(Int, String, Long)]
     var step = 1
     var exhausted = false
@@ -871,7 +858,7 @@ object Lexical {
       // `best` is the materializing action of this round's vocab: the
       // LAZY checkpoint + the pair aggregate run as ONE Spark job per
       // round instead of two (r14, the duplicateClusters count-fusion)
-      if (prev != null) { release(prev); prev = null }
+      if (prev != null) { Pin.release(prev); prev = null }
       if (best.isEmpty) exhausted = true
       else {
         val pair = best(0).getString(0)
@@ -881,12 +868,10 @@ object Lexical {
         vocab = vocab.withColumn("__syms", expr(
           s"trim(replace(replace(concat(' ', replace(__syms, ' ', '  '), " +
             s"' '), ' $a  $b ', ' $a$b '), '  ', ' '))"))
-          .localCheckpoint(false)
+          .pin(eager = false)
         step += 1
       }
     }
-    if (prev != null) release(prev)
-    release(vocab)
     steps.toSeq.toDF("step", "pair", "weight")
   }
 
@@ -974,7 +959,7 @@ object Lexical {
       // unpersist-at-return dropped the cache before any reader ran —
       // the broadcast V build and the scoring join each re-ran the
       // tokenize+aggregate chain; the checkpoint makes it one build
-      .localCheckpoint(true)
+      .pin()
     val vRow = uni.agg(count(lit(1)).as("__V"))
     val big = train.select(
         explode(graft.functions.TokenNgrams.tokenNgrams(col("__text"), 2))

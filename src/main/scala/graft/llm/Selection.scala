@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -88,7 +89,7 @@ object Selection {
       nBuckets: Int = 64): DataFrame = {
     require(nBuckets >= 2, "need at least two hash buckets")
     val pd = docBucketCounts(docs, idCol, textCol, nBuckets,
-      Seq(targetPred -> "__tgt")).localCheckpoint(true)
+      Seq(targetPred -> "__tgt")).pin()
     val raw = pd.groupBy("__b").agg(sum(col("__n")).cast(d38).as("__r"))
     val tgt = pd.filter(col("__tgt")).groupBy("__b")
       .agg(sum(col("__n")).cast(d38).as("__t"))
@@ -142,7 +143,7 @@ object Selection {
     require(nBuckets >= 2, "need at least two hash buckets")
     val pd = docBucketCounts(docs, idCol, textCol, nBuckets,
       Seq(col(labelCol) -> "__l", trainPred -> "__tr"))
-      .localCheckpoint(true)
+      .pin()
     // class priors over TRAIN DOCS (token-bearing ones — the same rows
     // the likelihood model sees)
     val trainDocs = pd.filter(col("__tr"))
@@ -218,7 +219,7 @@ object Selection {
       .withColumn("bucket", expr(s"n_tokens DIV $bucketWidth"))
       .withColumn("__h", polyhash(concat(lit("cur:"),
         col(idCol).cast("string"))))
-      .localCheckpoint(true)
+      .pin()
     val counts = staged.groupBy(col("bucket"))
       .agg(count(lit(1)).as("__c"))
     val offs = counts.withColumn("__off", coalesce(

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.engine.Pin.Ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -328,7 +329,7 @@ object Shaping {
   def epochPlan(docs: DataFrame, srcCol: String, idCol: String,
       weights: DataFrame): DataFrame = {
     val counts = docs.groupBy(col(srcCol)).agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .pin()
     val tot = counts.select(sum(col("__n")).as("__tot"))
     val reps = counts.crossJoin(broadcast(tot))
       .withColumn("__share", expr("(__n * 1000000) DIV __tot"))
@@ -337,7 +338,7 @@ object Shaping {
       .withColumn("n_epochs", when(col("__share") === 0L, lit(1L))
         .otherwise(greatest(lit(1L), expr("__w DIV __share"))))
       .select(col(srcCol), col("n_epochs"))
-      .localCheckpoint(true)
+      .pin()
     docs.select(col(srcCol), col(idCol))
       .join(broadcast(reps), srcCol)
       .withColumn("epoch", explode(sequence(lit(1L), col("n_epochs"))))
@@ -348,7 +349,7 @@ object Shaping {
     val per = docs.groupBy(col(srcCol).as("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(Text.tokenCount(col(textCol)).cast("long")).as("n_tokens"))
-      .localCheckpoint(true)
+      .pin()
     val tot = per.select(sum(col("n_tokens")).as("__tot"))
     // Zero-denominator guards (ANSI mode, default-on in Spark 4, makes
     // DIV 0 a runtime error): __tot = 0 when every doc tokenizes empty
@@ -436,7 +437,7 @@ object Shaping {
     val counts = docs.groupBy(col(srcCol)).agg(count(lit(1)).as("__n"))
       .join(weights.select(col("source").as(srcCol),
         col("weight_ppm").as("__w")).filter(col("__w") > 0L), srcCol)
-      .localCheckpoint(true)
+      .pin()
     val lam = counts.select(min(expr("(__n * 1000000) DIV __w"))
       .as("__lam"))
     val quota = counts.crossJoin(broadcast(lam))

@@ -1,5 +1,7 @@
 package graft.llm
 
+import graft.engine.Pin
+import graft.engine.Pin.Ops
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
@@ -151,7 +153,7 @@ object Similarity {
         posexplode(col("__q")).as(Seq("__j", "__xj")))
       .groupBy(col("__i"), col("__j"))
       .agg(sum((col("__xi") * col("__xj")).cast(d38)).as("__a"))
-      .localCheckpoint(true)
+      .pin()
     val dims = gram.select(col("__i").as("dim")).distinct()
     var v = dims.withColumn("__v", lit(1000000L).cast(d38))
     var lastNorm: DataFrame = null
@@ -174,7 +176,7 @@ object Similarity {
         .select(col("dim"),
           expr("CAST(CASE WHEN __n > 0 THEN __w * 1000000 DIV __n " +
             "ELSE 0 END AS DECIMAL(38,0))").as("__v"))
-        .localCheckpoint(true)
+        .pin()
     }
     v.crossJoin(broadcast(lastNorm))
       .select(col("dim").cast("int").as("dim"),
@@ -212,7 +214,8 @@ object Similarity {
     * the [[powerIteration]] chained-posexplode trick and collapse
     * map-side to three d×d cell frames; nothing corpus-sized shuffles.
     */
-  def linearCka(pairs: DataFrame, xCol: String, yCol: String): DataFrame = {
+  def linearCka(pairs: DataFrame, xCol: String,
+      yCol: String): DataFrame = Pin.scoped {
     val d38 = "decimal(38,0)"
     def milli(c: String) = expr(
       s"transform($c, v -> CAST(round(CAST(v AS DOUBLE) * 1000) AS BIGINT))")
@@ -223,7 +226,7 @@ object Similarity {
         .filter(col(xCol).isNotNull && col(yCol).isNotNull &&
           size(col(xCol)) === size(col(yCol)))
         .select(milli(xCol).as("__x"), milli(yCol).as("__y")))
-      .persist()
+      .cached()
     // d×d raw cross/self-products, each via one chained posexplode
     def gram(a: String, b: String) = staged
       .select(col(a).as("__u"), col(b).as("__v"))
@@ -242,7 +245,7 @@ object Similarity {
       .agg(sum(col("__xi")).cast(d38).as("__sx"),
         sum(col("__yi")).cast(d38).as("__sy"),
         count(lit(1)).as("__n"))
-      .localCheckpoint(true)
+      .pin()
     val n1 = sums.select(max(col("__n")).as("__n"),
       count(lit(1)).as("__d"))
     def frob(g: DataFrame, leftSum: String, rightSum: String) = g
@@ -253,7 +256,7 @@ object Similarity {
       .crossJoin(broadcast(n1))
       .select(expr(s"CAST(__n AS $d38) * __g - __si * __sj").as("__e"))
       .agg(sum(expr("__e * __e")).as("__f"))
-    val out = frob(gram("__x", "__y"), "__sx", "__sy")
+    frob(gram("__x", "__y"), "__sx", "__sy")
       .withColumnRenamed("__f", "num")
       .crossJoin(frob(gram("__x", "__x"), "__sx", "__sx")
         .withColumnRenamed("__f", "den_x"))
@@ -267,18 +270,16 @@ object Similarity {
             CAST(num AS DOUBLE) / (sqrt(CAST(den_x AS DOUBLE))
               * sqrt(CAST(den_y AS DOUBLE))) * 1000000 END)
             AS BIGINT)""").as("cka_micro"))
-      .localCheckpoint(true)
-    staged.unpersist(false)
-    out
+      .pin()
   }
 
-  def isotropyReport(df: DataFrame, vecCol: String): DataFrame = {
+  def isotropyReport(df: DataFrame, vecCol: String): DataFrame = Pin.scoped {
     val d38 = "decimal(38,0)"
     val base = df.filter(col(vecCol).isNotNull)
       .select(posexplode(col(vecCol)).as(Seq("__i", "__x")))
       .withColumn("__q",
         expr("CAST(round(CAST(__x AS DOUBLE) * 1000000) AS BIGINT)"))
-      .persist()
+      .cached()
     val perDim = base.groupBy(col("__i"))
       .agg(sum(col("__q").cast(d38)).as("__s"))
       .agg(count(lit(1)).as("dims"),
@@ -287,7 +288,7 @@ object Similarity {
       sum(col("__q").cast(d38) * col("__q")).as("__t"))
     val n = df.filter(col(vecCol).isNotNull)
       .agg(count(lit(1)).as("n"))
-    val out = n.crossJoin(broadcast(perDim)).crossJoin(broadcast(tot))
+    n.crossJoin(broadcast(perDim)).crossJoin(broadcast(tot))
       .select(col("n"), col("dims").cast("int").as("dims"),
         when(col("__t") > 0,
           expr("(__s2 * 1000000) DIV (n * __t)")).cast("long")
@@ -295,9 +296,7 @@ object Similarity {
         when(col("__t") > 0, round(col("__s2").cast("double") /
           (col("n").cast("double") * col("__t").cast("double")), 6))
           .as("conc"))
-      .localCheckpoint(true)
-    base.unpersist(false)
-    out
+      .pin()
   }
 
   /** k-occurrence hubness histogram (Radovanović/Nanopoulos/
@@ -438,16 +437,16 @@ object Similarity {
     * re-execute rounds 1..r−1 — the kCorePeel lineage discipline.
     */
   def kMeansRounds(vecs: DataFrame, idCol: String, vecCol: String,
-      k: Int, rounds: Int): DataFrame = {
+      k: Int, rounds: Int): DataFrame = Pin.scoped {
     require(k >= 1 && rounds >= 1, "k and rounds must be positive")
-    val e = vecs.select(col(idCol), col(vecCol)).persist()
+    val e = vecs.select(col(idCol), col(vecCol)).cached()
     var cent = e.orderBy(col(idCol)).limit(k)
       .withColumn("cid",
         row_number().over(Window.orderBy(col(idCol))) - 1)
       .select(col("cid"),
         transform(col(vecCol), v => round(v.cast("double"), 6))
           .as("centroid"))
-      .localCheckpoint(true)
+      .pin()
     var out: DataFrame = null
     for (r <- 1 to rounds) {
       out = nearestCentroid(e, idCol, vecCol, cent, "cid")
@@ -455,11 +454,9 @@ object Similarity {
         cent = groupCentroids(
           e.join(out.select(col(idCol), col("assigned").as("cid")),
             Seq(idCol)), vecCol, "cid")
-          .localCheckpoint(true)
+          .pin()
     }
-    val res = out.localCheckpoint(true)
-    e.unpersist(false)
-    res
+    out.pin()
   }
 
   /** Product-quantization codebooks (Jégou et al., "Product Quantization
@@ -1062,12 +1059,12 @@ object Similarity {
     val lam = lit(lambdaPct.toDouble / 100.0)
     val oneMinusLam = lit((100 - lambdaPct).toDouble / 100.0)
     val cand = bruteForceTopK(corpus, queries, idCol, vecCol,
-      queryIdCol, n).localCheckpoint(true)
+      queryIdCol, n).pin()
     val vecs = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("__v"))
     val candV = cand.join(vecs, Seq("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("__v"))
-      .localCheckpoint(true)
+      .pin()
     val pairSim = candV.select(col("query_id"),
         col("neighbor_id").as("ca"), col("__v").as("__va"))
       .join(candV.select(col("query_id"), col("neighbor_id").as("cb"),
@@ -1075,7 +1072,7 @@ object Similarity {
       .filter(col("ca") =!= col("cb"))
       .select(col("query_id"), col("ca"), col("cb"),
         cosine(col("__va"), col("__vb")).as("sim"))
-      .localCheckpoint(true)
+      .pin()
     val rel = candV.select(col("query_id"), col("neighbor_id"),
       col("cos"))
     var picks = Vector.empty[DataFrame]
@@ -1107,7 +1104,7 @@ object Similarity {
         .filter(col("__rk") === 1)
         .select(col("query_id"), lit(r).as("pick"), col("neighbor_id"),
           col("score"))
-        .localCheckpoint(true)
+        .pin()
       picks = picks :+ pick
     }
     picks.reduce(_ unionByName _)

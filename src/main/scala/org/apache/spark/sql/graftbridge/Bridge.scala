@@ -25,3 +25,41 @@ object Bridge {
       .sessionState.functionRegistry.registerFunction(
         org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
 }
+
+/** Cache-manager reads for `graft.engine.Pin` (the lookups are
+  * `private[sql]`): which cached entry backs a frame, and which cached
+  * entries a frame's plan reads.
+  */
+object CacheBridge {
+  import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder,
+    InMemoryRelation}
+
+  private def manager(df: org.apache.spark.sql.DataFrame) =
+    df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+
+  /** The cache entry `df` itself is, if it was persisted. */
+  def builderOf(df: org.apache.spark.sql.DataFrame): Option[AnyRef] =
+    manager(df).lookupCachedData(
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+      .map(_.cachedRepresentation.cacheBuilder)
+
+  /** The cache entries the plan of `df` reads when it executes. */
+  def buildersRead(df: org.apache.spark.sql.DataFrame): Set[AnyRef] = {
+    val m = manager(df)
+    if (m.isEmpty) Set.empty
+    else m.useCachedData(df.queryExecution.analyzed)
+      .collectWithSubqueries { case imr: InMemoryRelation => imr.cacheBuilder }
+      .toSet
+  }
+
+  /** Whether every block of a cache entry is built. */
+  def loaded(builder: AnyRef): Boolean =
+    builder.asInstanceOf[CachedRDDBuilder].isCachedColumnBuffersLoaded
+
+  /** The RDD id behind a cache entry, once its blocks are built. */
+  def rddId(builder: AnyRef): Option[Int] =
+    if (loaded(builder))
+      Some(builder.asInstanceOf[CachedRDDBuilder].cachedColumnBuffers.id)
+    else None
+}
